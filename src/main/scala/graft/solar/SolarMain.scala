@@ -209,7 +209,7 @@ object SolarMain {
 
     val spark = GraftSession.builder(master = "local[8]", app = "solar-logger").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Observability.attach(spark)
+    val listener = Observability.attach(spark)
 
     val useSocket = sys.env.get("SOLAR_TRANSPORT").contains("socket")
     val r = run(spark, bucket, seconds, useSocket)
@@ -222,6 +222,7 @@ object SolarMain {
     println(s"client lifecycle: connect=${r.connects} subscribe=${r.subscribes} " +
       s"messages=${r.messages} disconnect=${r.disconnects}")
     println(s"run_example records (last 5m, fx-1 or mx-1): ${r.exampleRecords}")
+    println(s"ingest ${listener.summary(_.source.contains("MqttSim"))}")
     spark.stop()
   }
 }

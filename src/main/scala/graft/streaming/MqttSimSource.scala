@@ -102,6 +102,8 @@ case class IndexOffset(index: Long) extends Offset {
   *   giant catch-up batch. */
 class MqttSimStream(broker: String, maxPerTrigger: Option[Long])
     extends MicroBatchStream with SupportsAdmissionControl {
+  /** The progress events' source description. */
+  override def toString: String = s"MqttSimStream[$broker]"
   override def initialOffset(): Offset = IndexOffset(0L)
   override def latestOffset(): Offset = IndexOffset(MqttSimBroker.size(broker))
   override def deserializeOffset(json: String): Offset = IndexOffset(json.toLong)

@@ -11,7 +11,17 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * disconnect) and per-batch progress (rows/sec ≈ message callbacks).
   */
 class IngestListener extends StreamingQueryListener {
-  final case class BatchStat(batchId: Long, numInputRows: Long, source: String)
+  /** One progress event: input rows, the batch's `triggerExecution` and
+    * `addBatch` times, and the state operators' total rows and commit
+    * time (summed over operators; 0 for a stateless query). */
+  final case class BatchStat(
+      batchId: Long,
+      numInputRows: Long,
+      source: String,
+      triggerMs: Long,
+      addBatchMs: Long,
+      stateRows: Long,
+      stateCommitMs: Long)
 
   val started = new ConcurrentLinkedQueue[String]()
   val batches = new ConcurrentLinkedQueue[BatchStat]()
@@ -23,7 +33,23 @@ class IngestListener extends StreamingQueryListener {
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = e.progress
     val src = if (p.sources.nonEmpty) p.sources.head.description else ""
-    batches.add(BatchStat(p.batchId, p.numInputRows, src))
+    def ms(k: String): Long = Option(p.durationMs.get(k)).fold(0L)(_.longValue)
+    batches.add(BatchStat(p.batchId, p.numInputRows, src,
+      triggerMs = ms("triggerExecution"),
+      addBatchMs = ms("addBatch"),
+      stateRows = p.stateOperators.map(_.numRowsTotal).sum,
+      stateCommitMs = p.stateOperators.map(_.commitTimeMs).sum))
+  }
+
+  /** One line over the batches seen so far that `keep` selects (one
+    * query's, say, by its source): count, p50 `triggerExecution` ms, and
+    * the state rows of the latest batch. */
+  def summary(keep: BatchStat => Boolean): String = {
+    import scala.jdk.CollectionConverters._
+    val bs = batches.asScala.toVector.filter(keep)
+    val ms = bs.map(_.triggerMs).sorted
+    val p50 = if (ms.isEmpty) 0L else ms(ms.size / 2)
+    s"batches=${bs.size} batch_ms_p50=$p50 state_rows=${bs.lastOption.fold(0L)(_.stateRows)}"
   }
 
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
