@@ -30,23 +30,11 @@ import org.apache.spark.sql.functions._
   * The quantile extraction folds into ONE hash aggregate (conditional
   * max per requested quantile) — no separate pivot pass.
   *
-  * Two bookkeeping shapes (r15, guide §2.4 — remove exchanges):
-  *
-  *   - `boundedKeys = false` (the 100 TB-safe default for UNKNOWN key
-  *     cardinality): per-partition offsets come from a `(pid)`-grain
-  *     aggregate + a ~|partitions|-row prefix-sum window, joined back
-  *     broadcast — every frame is at most |partitions| or
-  *     |partitions × keys-per-partition| rows and nothing assumes the
-  *     key domain is small.
-  *   - `boundedKeys = true` (callers whose key domain is bounded by the
-  *     data's semantics — return flags, event types, languages, weeks):
-  *     the exclusive per-partition offset is ONE range-frame window
-  *     (`ORDER BY pid RANGE UNBOUNDED PRECEDING .. 1 PRECEDING`) over
-  *     the `(pid, key)` bookkeeping frame itself, and the rank join
-  *     broadcasts that same frame — two fewer exchanges and one fewer
-  *     broadcast per call (measured: q_percentiles 17 → 11 AQE jobs).
-  *     The window/broadcast hold |partitions × keys| rows, so this path
-  *     must NOT be used when keys can grow with the data.
+  * Per-partition offsets come from a `(pid)`-grain aggregate + a
+  * ~|partitions|-row prefix-sum window, joined back broadcast: every
+  * bookkeeping frame is at most |partitions| or
+  * |partitions × keys-per-partition| rows, and nothing assumes the key
+  * domain is small.
   */
 object Quantiles {
 
@@ -55,9 +43,6 @@ object Quantiles {
     * @param value numeric column name (cast to double)
     * @param ps    quantiles in [0, 1], one output column per entry
     * @param names output column name per entry of `ps`
-    * @param boundedKeys caller guarantees the key domain is bounded (see
-    *                    class doc) — enables the fused small-frame
-    *                    bookkeeping
     * @return one row per key: (key, n, q_<p> ...) with exact interpolated
     *         quantiles, quantile columns named by `names`. */
   def exact(
@@ -65,24 +50,7 @@ object Quantiles {
       key: String,
       value: String,
       ps: Seq[Double],
-      names: Seq[String],
-      boundedKeys: Boolean = false): DataFrame =
-    exactAndSorted(df, key, value, ps, names, boundedKeys)._1
-
-  /** [[exact]], additionally returning the range-sorted, ScratchCache'd
-    * `(key, value)` projection of the input that the operator built
-    * anyway. Callers that rescan the SAME projection afterwards (the
-    * winsorize clip, the MAD deviation pass) read the cache instead of
-    * re-scanning the fact table — same rows, `value` already cast to
-    * double (exact for the integer-cents inputs these queries feed).
-    * The cache lives until the caller's `ScratchCache.releaseAll()`. */
-  def exactAndSorted(
-      df: DataFrame,
-      key: String,
-      value: String,
-      ps: Seq[Double],
-      names: Seq[String],
-      boundedKeys: Boolean = false): (DataFrame, DataFrame) = {
+      names: Seq[String]): DataFrame = {
     require(ps.nonEmpty && ps.length == names.length)
     val spark = df.sparkSession
     import org.apache.spark.sql.expressions.Window
@@ -138,46 +106,19 @@ object Quantiles {
 
     // extents: one row per key (start rank, n); ranked: (global idx, v)
     // for every input row, derived from the stamped cache + bookkeeping.
-    val (extents, ranked) =
-      if (boundedKeys) {
-        // fused: the exclusive per-pid offset is a range-frame prefix sum
-        // computed directly on the (pid, k) frame — rows of pid' < pid
-        // (ALL their k rows) are exactly the preceding partitions' totals.
-        // |partitions × keys| rows in one window task + one broadcast:
-        // fine under the caller's bounded-key guarantee, a straggler/OOM
-        // shape without it.
-        val wOff = Window.orderBy("pid").rangeBetween(Window.unboundedPreceding, -1)
-        // per-row guard: this (pid,k) run's END position within its
-        // partition; its max over the partition is the partition total,
-        // so any >= 2^33 partition trips on its last run
-        val runEnd = seq(col("mmin"), col("pid")) + col("c")
-        val kinfo = cnts
-          .withColumn("off",
-            coalesce(sum(col("c")).over(wOff), lit(0L))
-              + overflowGuard(runEnd, col("pid")))
-          .withColumn("kstart", col("off") + seq(col("mmin"), col("pid")))
-        val ext = kinfo.groupBy("k")
-          .agg(min(col("kstart")).as("start"), sum(col("c")).as("n"))
-        val rk = stamped
-          .join(broadcast(kinfo.select("pid", "k", "kstart", "mmin")), Seq("pid", "k"))
-          .select((col("kstart") + (col("mid") - col("mmin"))).as("idx"), col("v"))
-        (ext, rk)
-      } else {
-        val wOff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-        // one row per partition (32ish) — the single-partition window is fine
-        val offsets = cnts.groupBy("pid").agg(sum(col("c")).as("pn"))
-          .select(col("pid"),
-            (coalesce(sum(col("pn")).over(wOff), lit(0L))
-              + overflowGuard(col("pn"), col("pid"))).as("off"))
-        val ext = cnts.join(broadcast(offsets), "pid")
-          .select(col("k"), col("c"),
-            (col("off") + seq(col("mmin"), col("pid"))).as("kstart"))
-          .groupBy("k").agg(min(col("kstart")).as("start"), sum(col("c")).as("n"))
-        val rk = stamped
-          .join(broadcast(offsets), "pid")
-          .select((col("off") + seq(col("mid"), col("pid"))).as("idx"), col("v"))
-        (ext, rk)
-      }
+    val wOff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
+    // one row per partition (32ish) — the single-partition window is fine
+    val offsets = cnts.groupBy("pid").agg(sum(col("c")).as("pn"))
+      .select(col("pid"),
+        (coalesce(sum(col("pn")).over(wOff), lit(0L))
+          + overflowGuard(col("pn"), col("pid"))).as("off"))
+    val extents = cnts.join(broadcast(offsets), "pid")
+      .select(col("k"), col("c"),
+        (col("off") + seq(col("mmin"), col("pid"))).as("kstart"))
+      .groupBy("k").agg(min(col("kstart")).as("start"), sum(col("c")).as("n"))
+    val ranked = stamped
+      .join(broadcast(offsets), "pid")
+      .select((col("off") + seq(col("mid"), col("pid"))).as("idx"), col("v"))
 
     // target ranks per key per quantile: rank p·(n−1) → floor + ceil rows,
     // exploded into (lo, hi) bracketing rows in the same projection
@@ -216,8 +157,7 @@ object Quantiles {
       val frac = t - floor(t)
       (col(s"__lo_$nm") + (col(s"__hi_$nm") - col(s"__lo_$nm")) * frac).as(nm)
     }
-    val result = wide.select((col("k").as(key) +: col("n") +: qvs): _*)
-    (result, stamped.select(col("k").as(key), col("v").as(value)))
+    wide.select((col("k").as(key) +: col("n") +: qvs): _*)
   }
 
   // local alias so the helper reads naturally without importing Column

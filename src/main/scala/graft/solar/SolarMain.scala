@@ -16,19 +16,14 @@ import org.apache.spark.sql.SparkSession
   * query (`influx_query.py:88-100`) dispatched through the config-driven
   * execute path.
   *
-  * `runMain graft.solar.SolarMain [bucketDir] [seconds]` — the container
-  * has no MQTT broker, so the demo stands a broker in behind the SAME
-  * `MqttClient` seam a production transport implements: credentials are
-  * validated, the lifecycle callbacks fire, and received messages flow
-  * through `IngestBridge` into the DataSourceV2 ingest log that Spark
-  * consumes as micro-batches. Two transports:
-  *
-  *   - default: the in-memory [[MqttSimNetwork]]/[[MqttSimClient]] pair;
-  *   - `SOLAR_TRANSPORT=socket`: a real MQTT 3.1.1 session — a
-  *     [[LoopbackBroker]] on an ephemeral 127.0.0.1 port, a
-  *     [[MqttSocketClient]] CONNECT/SUBSCRIBE handshake over TCP, and
-  *     every packet delivered through an actual socket (plain TCP; the
-  *     stub broker does not terminate TLS).
+  * `runMain graft.solar.SolarMain [bucketDir] [seconds]` — the demo
+  * stands its own broker in: a [[LoopbackBroker]] on an ephemeral
+  * 127.0.0.1 port. A [[MqttSocketClient]] runs a real MQTT 3.1.1
+  * CONNECT/SUBSCRIBE session against it over TCP (plain TCP; the stub
+  * broker does not terminate TLS): credentials are validated, the
+  * lifecycle callbacks fire, and every packet crosses an actual socket
+  * before `IngestBridge` lands it in the DataSourceV2 ingest log that
+  * Spark consumes as micro-batches.
   *
   * The pipeline body lives in [[run]] so `SolarMainSpec` drives the whole
   * composition end-to-end (broker → wire → gate → decode → store →
@@ -52,7 +47,7 @@ object SolarMain {
   /** Run the full pipeline for ~`seconds` of wall-clock publishing.
     *
     * Stages, all live at once:
-    *   1. simulated MATE publisher → broker (sim network or TCP loopback);
+    *   1. simulated MATE publisher → TCP loopback broker → client;
     *   2. [[StreamingIngest.start]]: subscribe → status-gate → decode →
     *      [[PointStore]] append (checkpointed);
     *   3. [[graft.query.QueryBuilder.streaming]] tail of the bucket →
@@ -68,39 +63,32 @@ object SolarMain {
       spark: SparkSession,
       bucket: String,
       seconds: Int,
-      useSocket: Boolean,
       periodMs: Long = 100L,
       watermarkLeadSec: Long = 180L): Report = {
     val ingestLog = s"solar-${System.nanoTime()}"
     require(PointStore.healthCheck(spark, bucket), s"bucket not writable: $bucket")
 
     // secrets: env-first with demo defaults (the reference fails hard on
-    // missing env; a demo main provides the fallback the .env would)
+    // missing env; a demo main provides the fallback the .env would). The
+    // credentials and topic are used; host/port are validated but the
+    // loopback broker's ephemeral port stands in for them.
     val defaults = Map(
-      "MQTT_HOST" -> "sim-broker", "MQTT_PORT" -> "8883",
+      "MQTT_HOST" -> "127.0.0.1", "MQTT_PORT" -> "8883",
       "MQTT_USER" -> "solar", "MQTT_TOKEN" -> "demo-token",
       "MQTT_TOPIC" -> "mate/#")
     val secrets = SecretStore.mqttSecrets(k => sys.env.get(k).orElse(defaults.get(k)))
 
-    // the "remote broker" + the client seam a production transport
-    // implements — in-memory sim by default, a REAL TCP loopback MQTT
-    // session with useSocket
-    val (client: MqttClient, cfg: MqttConnectConfig, loopback: Option[LoopbackBroker]) =
-      if (useSocket) {
-        val b = new LoopbackBroker(secrets.user, secrets.token)
-        println(s"socket transport: loopback broker on 127.0.0.1:${b.port}")
-        (new MqttSocketClient("solar-logger"),
-          MqttConnectConfig("127.0.0.1", b.port, secrets.user, secrets.token, useTls = false),
-          Some(b))
-      } else {
-        MqttSimNetwork.register(secrets.host, secrets.port, secrets.user, secrets.token)
-        (new MqttSimClient, MqttConnectConfig.fromSecrets(secrets), None)
-      }
+    // the "remote broker" and a REAL TCP MQTT session against it
+    val broker = new LoopbackBroker(secrets.user, secrets.token)
+    println(s"loopback broker on 127.0.0.1:${broker.port}")
+    val client = new MqttSocketClient("solar-logger")
+    val cfg = MqttConnectConfig("127.0.0.1", broker.port, secrets.user, secrets.token,
+      useTls = false)
     val bridge = new IngestBridge(client, ingestLog, secrets.topic)
     val rc = client.connectWithRetry(cfg, bridge, maxRetries = 3)
     require(rc == MqttReturnCode.Accepted, MqttReturnCode.describe(rc))
-    // over a real socket the SUBACK is asynchronous — publishing before
-    // the subscription registers would silently drop the status messages
+    // the SUBACK is asynchronous — publishing before the subscription
+    // registers would silently drop the status messages
     val subDeadline = System.currentTimeMillis() + 5000
     while (bridge.events.count("subscribe") < 1 && System.currentTimeMillis() < subDeadline)
       Thread.sleep(10)
@@ -108,25 +96,16 @@ object SolarMain {
 
     // Simulated MATE: statuses online, then a packet per periodMs,
     // published into the broker → delivered to the subscribed client
+    // (arrival stamped at the client's receipt)
     val online = "online".getBytes("US-ASCII")
-    def netPublish(topic: String, payload: Array[Byte], us: Long): Unit =
-      loopback match {
-        case Some(b) => b.publish(topic, payload) // arrival stamped at receipt
-        case None => MqttSimNetwork.publish(secrets.host, secrets.port, topic, payload, us)
-      }
-    netPublish(Topics.MateStatus, online, 0L)
-    Seq(Topics.DcStatus, Topics.FxStatus, Topics.MxStatus)
-      .zipWithIndex
-      .foreach { case (t, i) => netPublish(t, online, i + 1L) }
+    Seq(Topics.MateStatus, Topics.DcStatus, Topics.FxStatus, Topics.MxStatus)
+      .foreach(broker.publish(_, online))
     val publisher = new Thread(() => {
       var i = 0L
       val t0 = System.currentTimeMillis()
       while (System.currentTimeMillis() - t0 < seconds * 1000L) {
         val epoch = System.currentTimeMillis() / 1000
-        netPublish(
-          SolarSynth.topicOf(i),
-          SolarSynth.encode(i, epoch, (i % 500).toDouble),
-          System.nanoTime() / 1000)
+        broker.publish(SolarSynth.topicOf(i), SolarSynth.encode(i, epoch, (i % 500).toDouble))
         i += 1
         Thread.sleep(periodMs)
       }
@@ -158,14 +137,13 @@ object SolarMain {
     // finalizes them (the rollup would otherwise hold the current minute
     // open — correct streaming semantics, but an empty demo printout)
     val flushEpoch = System.currentTimeMillis() / 1000 + watermarkLeadSec
-    netPublish(SolarSynth.topicOf(0L), SolarSynth.encode(0L, flushEpoch, 0.0),
-      System.nanoTime() / 1000)
+    broker.publish(SolarSynth.topicOf(0L), SolarSynth.encode(0L, flushEpoch, 0.0))
     query.processAllAvailable()   // probe lands in the bucket…
     rollup.processAllAvailable()  // …then the tail sees it and finalizes
     query.stop()
     rollup.stop()
     client.disconnect()
-    loopback.foreach(_.close())
+    broker.close()
 
     val points = PointStore.read(spark, bucket)
     val byMeasurement = points.groupBy("measurement").count()
@@ -211,8 +189,7 @@ object SolarMain {
     spark.sparkContext.setLogLevel("WARN")
     val listener = Observability.attach(spark)
 
-    val useSocket = sys.env.get("SOLAR_TRANSPORT").contains("socket")
-    val r = run(spark, bucket, seconds, useSocket)
+    val r = run(spark, bucket, seconds)
 
     println(s"ingested ${r.points} points into $bucket " +
       s"(dead letters: ${r.deadLetters})")

@@ -214,7 +214,11 @@ final class LoopbackBroker(user: String, password: String) {
           }
         }
       } finally conns.remove(conn)
-    } catch { case _: IOException => () }
+    } catch {
+      // a malformed or foreign first packet (e.g. a TLS ClientHello) must
+      // not leave the peer waiting on an open socket for a CONNACK
+      case _: IOException => try s.close() catch { case _: IOException => () }
+    }
   }
 
   /** Outbound QoS for ROUTED messages (client-published → subscribers):

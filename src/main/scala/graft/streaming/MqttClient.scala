@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.ConcurrentLinkedQueue
-import graft.config.MqttSecrets
 import scala.jdk.CollectionConverters._
 
 /** The pluggable MQTT client seam.
@@ -16,13 +14,12 @@ import scala.jdk.CollectionConverters._
   * (`mqtt_classes.py:124-185`: on_connect / on_disconnect / on_message /
   * on_subscribe / on_unsubscribe / on_socket_open / on_socket_close).
   *
-  * A real transport (paho-java, HiveMQ client, …) implements [[MqttClient]]
-  * and nothing else changes: the callbacks bridge into the ingest log and
-  * Spark's offsets/checkpointing stay exactly as they are. The container
-  * has no broker (and no client lib), so the shipped implementation is
-  * [[MqttSimClient]] against [[MqttSimNetwork]] — a faithful stand-in with
-  * credentials, TLS requirements, availability, and delivery, driven
-  * end-to-end by `MqttClientSpec`.
+  * The shipped transport is [[MqttSocketClient]]: MQTT 3.1.1 over a
+  * real TCP (or TLS) socket, driven end to end against [[LoopbackBroker]]
+  * by `MqttSocketClientSpec`. Another client library (paho-java, HiveMQ
+  * client, …) would implement [[MqttClient]] and nothing else changes:
+  * the callbacks bridge into the ingest log and Spark's offsets/
+  * checkpointing stay exactly as they are.
   */
 object MqttReturnCode {
   /** paho-style connack codes — reference `mqtt_classes.py:160-168`. */
@@ -55,11 +52,6 @@ final case class MqttConnectConfig(
     useTls: Boolean = true,
     tlsInsecure: Boolean = true,
     keepAliveSecs: Int = 60)
-
-object MqttConnectConfig {
-  def fromSecrets(s: MqttSecrets): MqttConnectConfig =
-    MqttConnectConfig(host = s.host, port = s.port, username = s.user, password = s.token)
-}
 
 /** The seven reference lifecycle callbacks. All default to no-ops so an
   * implementation overrides only what it observes. */
@@ -98,129 +90,6 @@ trait MqttClient {
       attempt += 1
     }
     rc
-  }
-}
-
-/** A simulated remote MQTT broker network: named brokers with registered
-  * credentials, a TLS requirement, an availability flag, and
-  * subscription-based delivery to connected [[MqttSimClient]]s. This is
-  * the "other end of the socket" the container cannot provide. */
-object MqttSimNetwork {
-  final case class Broker(
-      var user: String,
-      var password: String,
-      var requireTls: Boolean = true,
-      var up: Boolean = true)
-
-  private val brokers = new ConcurrentHashMap[String, Broker]()
-  private val clients = new ConcurrentHashMap[String, ConcurrentLinkedQueue[MqttSimClient]]()
-
-  private def key(host: String, port: Int) = s"$host:$port"
-
-  def register(host: String, port: Int, user: String, password: String,
-      requireTls: Boolean = true): Unit =
-    brokers.put(key(host, port), Broker(user, password, requireTls))
-
-  def setUp(host: String, port: Int, up: Boolean): Unit =
-    Option(brokers.get(key(host, port))).foreach(_.up = up)
-
-  def lookup(host: String, port: Int): Option[Broker] =
-    Option(brokers.get(key(host, port)))
-
-  private[streaming] def attach(host: String, port: Int, c: MqttSimClient): Unit =
-    clients.computeIfAbsent(key(host, port), _ => new ConcurrentLinkedQueue()).add(c)
-
-  private[streaming] def detach(host: String, port: Int, c: MqttSimClient): Unit =
-    Option(clients.get(key(host, port))).foreach(_.remove(c))
-
-  /** Broker-side publish: deliver to every connected, subscribed client. */
-  def publish(host: String, port: Int, topic: String, payload: Array[Byte],
-      arrivalMicros: Long): Unit =
-    Option(clients.get(key(host, port))).foreach(_.asScala.foreach(
-      _.deliver(topic, payload, arrivalMicros)))
-
-  /** Broker-side connection drop (network blip): every client sees
-    * socket-close + on_disconnect with a non-zero rc, like paho. */
-  def dropConnections(host: String, port: Int): Unit =
-    Option(clients.get(key(host, port))).foreach { q =>
-      q.asScala.foreach(_.dropped())
-      q.clear()
-    }
-
-  def reset(): Unit = { brokers.clear(); clients.clear() }
-}
-
-/** [[MqttClient]] against [[MqttSimNetwork]]: real connect/auth/TLS/
-  * subscribe/deliver state machine, simulated transport. MQTT topic
-  * filters support the `#` multi-level wildcard tail (the reference
-  * subscribes to `mate/#`-shaped topics). */
-final class MqttSimClient extends MqttClient {
-  private var cfg: MqttConnectConfig = _
-  private var callbacks: MqttCallbacks = new MqttCallbacks {}
-  private val subs = new ConcurrentLinkedQueue[String]()
-  @volatile private var connected = false
-
-  override def isConnected: Boolean = connected
-
-  override def connect(cfg: MqttConnectConfig, callbacks: MqttCallbacks): Int = {
-    this.cfg = cfg
-    this.callbacks = callbacks
-    callbacks.onSocketOpen()
-    val rc = MqttSimNetwork.lookup(cfg.host, cfg.port) match {
-      case None => MqttReturnCode.ServerUnavailable
-      case Some(b) if !b.up => MqttReturnCode.ServerUnavailable
-      case Some(b) if b.requireTls && !cfg.useTls => MqttReturnCode.NotAuthorized
-      case Some(b) if b.user != cfg.username || b.password != cfg.password =>
-        MqttReturnCode.BadCredentials
-      case Some(_) => MqttReturnCode.Accepted
-    }
-    if (rc == MqttReturnCode.Accepted) {
-      connected = true
-      MqttSimNetwork.attach(cfg.host, cfg.port, this)
-    } else {
-      callbacks.onSocketClose()
-    }
-    // paho fires on_connect with the rc in BOTH outcomes; the reference's
-    // _on_connect subscribes on rc==0 and logs the table entry otherwise
-    callbacks.onConnect(rc)
-    rc
-  }
-
-  override def subscribe(topic: String, qos: Int): Unit = if (connected) {
-    subs.add(topic)
-    callbacks.onSubscribe(topic, qos)
-  }
-
-  override def unsubscribe(topic: String): Unit = {
-    subs.remove(topic)
-    callbacks.onUnsubscribe(topic)
-  }
-
-  override def disconnect(): Unit = if (connected) {
-    connected = false
-    MqttSimNetwork.detach(cfg.host, cfg.port, this)
-    callbacks.onSocketClose()
-    callbacks.onDisconnect(MqttReturnCode.Accepted)
-  }
-
-  /** Re-run the connect handshake with the stored config (paho
-    * `reconnect()`); the reference re-subscribes from inside its
-    * on_connect callback, and so do ours. */
-  def reconnect(): Int = connect(cfg, callbacks)
-
-  private def matches(filter: String, topic: String): Boolean =
-    if (filter.endsWith("/#")) topic.startsWith(filter.dropRight(1)) || topic == filter.dropRight(2)
-    else filter == topic
-
-  private[streaming] def deliver(topic: String, payload: Array[Byte],
-      arrivalMicros: Long): Unit =
-    if (connected && subs.asScala.exists(matches(_, topic)))
-      callbacks.onMessage(topic, payload, arrivalMicros)
-
-  private[streaming] def dropped(): Unit = if (connected) {
-    connected = false
-    callbacks.onSocketClose()
-    callbacks.onDisconnect(MqttReturnCode.ServerUnavailable)
   }
 }
 

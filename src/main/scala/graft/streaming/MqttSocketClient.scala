@@ -108,6 +108,8 @@ final class MqttSocketClient(clientId: String = "graft-ingest") extends MqttClie
 
   override def isConnected: Boolean = connected
 
+  private val HandshakeTimeoutMs = 2000
+
   /** Serializes packet writes: the reader thread (PUBACK/PUBREC/PUBCOMP/
     * PINGRESP) and caller threads (subscribe/unsubscribe/disconnect)
     * share one stream; interleaved bytes would corrupt the wire. */
@@ -128,10 +130,15 @@ final class MqttSocketClient(clientId: String = "graft-ingest") extends MqttClie
     this.cfg = cfg
     this.callbacks = callbacks
     closing = false
+    val plain = new Socket()
+    var opened = false
     val rc =
       try {
-        val plain = new Socket()
-        plain.connect(new InetSocketAddress(cfg.host, cfg.port), 2000)
+        plain.connect(new InetSocketAddress(cfg.host, cfg.port), HandshakeTimeoutMs)
+        // the same deadline bounds the TLS handshake and the CONNACK read:
+        // a broker that accepts and never answers maps to rc=3 instead of
+        // blocking connect (and connectWithRetry) forever
+        plain.setSoTimeout(HandshakeTimeoutMs)
         val s =
           if (!cfg.useTls) plain
           else {
@@ -141,6 +148,7 @@ final class MqttSocketClient(clientId: String = "graft-ingest") extends MqttClie
               .createSocket(plain, cfg.host, cfg.port, true)
           }
         callbacks.onSocketOpen()
+        opened = true
         val o = new DataOutputStream(s.getOutputStream)
         val in = new DataInputStream(s.getInputStream)
         MqttWire.write(o, MqttWire.CONNECT, MqttWire.connectBody(clientId, cfg))
@@ -150,6 +158,7 @@ final class MqttSocketClient(clientId: String = "graft-ingest") extends MqttClie
             MqttReturnCode.ServerUnavailable
           else ack.body(1) & 0xff
         if (code == MqttReturnCode.Accepted) {
+          s.setSoTimeout(0) // idle sessions block in the reader
           socket = s; out = o
           connected = true
           startReader(in, s, o)
@@ -160,8 +169,10 @@ final class MqttSocketClient(clientId: String = "graft-ingest") extends MqttClie
         code
       } catch {
         case _: IOException =>
-          // connection refused / reset mid-handshake: paho raises a socket
-          // error the reference maps to "server unavailable"
+          // connection refused / reset or timed out mid-handshake: paho
+          // raises a socket error the reference maps to "server unavailable"
+          try plain.close() catch { case _: IOException => () }
+          if (opened) callbacks.onSocketClose()
           MqttReturnCode.ServerUnavailable
       }
     callbacks.onConnect(rc)

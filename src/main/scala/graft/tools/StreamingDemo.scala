@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
   * decode → checkpointed point-bucket append; the SAME bucket is read
   * back through the query surface (batch `QueryBuilder` aggregate and
   * the live streaming tail that finalizes windows on a late append).
-  * With `--tcp` the feed runs on the REAL transport, exactly-once end
-  * to end: a publisher [[MqttSocketClient]] publishes every message at
+  * The feed runs on the REAL transport, exactly-once end to end: a
+  * publisher [[MqttSocketClient]] publishes every message at
   * QoS 2 over a live socket to a [[LoopbackBroker]] routing at QoS 2 to
   * a subscriber [[MqttSocketClient]] whose [[IngestBridge]] lands it in
   * the ingest log — the four-leg PUBLISH/PUBREC/PUBREL/PUBCOMP
@@ -34,7 +34,7 @@ import org.apache.spark.sql.SparkSession
   * exact shape an always-on crawl ingest runs for months. The demo's
   * counts are pinned by `StreamingDemoSpec`.
   *
-  * Usage: `runMain graft.tools.StreamingDemo [workDir] [--tcp]`.
+  * Usage: `runMain graft.tools.StreamingDemo [workDir]`.
   */
 object StreamingDemo {
 
@@ -84,8 +84,7 @@ object StreamingDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val useTcp = args.contains("--tcp")
-    val work = args.filterNot(_.startsWith("--")).headOption.getOrElse(
+    val work = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_demo").toString)
     val spark = GraftSession.get("local[8]")
     spark.sparkContext.setLogLevel("WARN")
@@ -95,61 +94,53 @@ object StreamingDemo {
     val epoch = 1700000000L
     def us(i: Long) = i * 1000000L
 
-    // ---- transport: sim log (default) or real TCP at QoS 2 -------------
+    // ---- transport: real TCP, QoS 2 on both hops ----------------------
+    val lb = new LoopbackBroker("solar", "tok123")
+    lb.forwardQos = 2 // routed copies run the four-leg flow too
+    val sub = new MqttSocketClient("demo-sub")
+    val bridge = new IngestBridge(sub, broker, "mate/#")
+    val cfg = MqttConnectConfig("127.0.0.1", lb.port, "solar", "tok123", useTls = false)
+    require(sub.connect(cfg, bridge) == MqttReturnCode.Accepted, "subscriber connect")
+    awaitDemo(bridge.events.count("subscribe") >= 1, "SUBACK")
+    val pub = new MqttSocketClient("demo-pub")
+    require(pub.connect(cfg, new MqttCallbacks {}) == MqttReturnCode.Accepted,
+      "publisher connect")
     var published = 0L
-    var closeTransport: () => Unit = () => ()
-    val send: (String, Array[Byte], Long) => Unit =
-      if (!useTcp) { (topic, payload, arrivalMicros) =>
-        MqttSimBroker.publish(broker, topic, payload, arrivalMicros)
-        published += 1
-      } else {
-        val lb = new LoopbackBroker("solar", "tok123")
-        lb.forwardQos = 2 // routed copies run the four-leg flow too
-        val sub = new MqttSocketClient("demo-sub")
-        val bridge = new IngestBridge(sub, broker, "mate/#")
-        val cfg = MqttConnectConfig("127.0.0.1", lb.port, "solar", "tok123", useTls = false)
-        require(sub.connect(cfg, bridge) == MqttReturnCode.Accepted, "subscriber connect")
-        awaitDemo(bridge.events.count("subscribe") >= 1, "SUBACK")
-        val pub = new MqttSocketClient("demo-pub")
-        require(pub.connect(cfg, new MqttCallbacks {}) == MqttReturnCode.Accepted,
-          "publisher connect")
-        closeTransport = () => { pub.disconnect(); sub.disconnect(); lb.close() }
-        (topic, payload, _) => { // arrival stamped at subscriber receipt
-          require(pub.publish(topic, payload, qos = 2), s"QoS-2 publish failed: $topic")
-          published += 1
-        }
-      }
-    // TCP delivery lands on the subscriber's reader thread — drain the
+    def send(topic: String, payload: Array[Byte]): Unit = { // arrival stamped at receipt
+      require(pub.publish(topic, payload, qos = 2), s"QoS-2 publish failed: $topic")
+      published += 1
+    }
+    // delivery lands on the subscriber's reader thread — drain the
     // two-hop QoS-2 flows before each Spark read
     def drained(): Unit = awaitDemo(MqttSimBroker.size(broker) == published, "delivery")
 
     // -------- act 1: everything online, then an FX outage ---------------
-    send(Topics.MateStatus, "online".getBytes, us(0))
-    send(Topics.DcStatus, "online".getBytes, us(1))
-    send(Topics.FxStatus, "online".getBytes, us(2))
-    send(Topics.MxStatus, "online".getBytes, us(3))
+    send(Topics.MateStatus, "online".getBytes)
+    send(Topics.DcStatus, "online".getBytes)
+    send(Topics.FxStatus, "online".getBytes)
+    send(Topics.MxStatus, "online".getBytes)
     for (i <- 0 until 8) {
-      send(Topics.DcData, SolarSynth.encodeDc(epoch + 60 * i, i), us(10 + 3 * i))
-      send(Topics.FxData, SolarSynth.encodeFx(epoch + 60 * i, i), us(11 + 3 * i))
-      send(Topics.MxData, SolarSynth.encodeMx(epoch + 60 * i, i), us(12 + 3 * i))
+      send(Topics.DcData, SolarSynth.encodeDc(epoch + 60 * i, i))
+      send(Topics.FxData, SolarSynth.encodeFx(epoch + 60 * i, i))
+      send(Topics.MxData, SolarSynth.encodeMx(epoch + 60 * i, i))
     }
-    send(Topics.FxStatus, "offline".getBytes, us(40))
+    send(Topics.FxStatus, "offline".getBytes)
     // published during the outage: the gate must DROP this packet
-    send(Topics.FxData, SolarSynth.encodeFx(epoch + 600, 99), us(41))
+    send(Topics.FxData, SolarSynth.encodeFx(epoch + 600, 99))
     drained()
 
     println(s"[demo] act 1 publishing done: ${MqttSimBroker.size(broker)} MQTT messages " +
-      s"on '$broker' via ${if (useTcp) "TCP QoS 2 x 2 hops" else "the sim log"}")
+      s"on '$broker' via TCP QoS 2 x 2 hops")
     val q = StreamingIngest.start(spark, broker, bucket, chk)
     q.processAllAvailable()
 
     // -------- act 2: a second micro-batch; device state carried over ----
-    send(Topics.FxStatus, "online".getBytes, us(50))
-    send(Topics.FxData, SolarSynth.encodeFx(epoch + 660, 12), us(51))
+    send(Topics.FxStatus, "online".getBytes)
+    send(Topics.FxData, SolarSynth.encodeFx(epoch + 660, 12))
     drained()
     q.processAllAvailable()
     q.stop()
-    closeTransport()
+    pub.disconnect(); sub.disconnect(); lb.close()
 
     val pts = PointStore.read(spark, bucket)
     println(s"[demo] point bucket: ${pts.count()} points, " +

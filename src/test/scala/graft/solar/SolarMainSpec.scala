@@ -5,19 +5,20 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives [[SolarMain.run]] — the `start_logger.py`-parity entrypoint —
   * end-to-end exactly as `runMain graft.solar.SolarMain` does: simulated
-  * MATE publisher → broker → MQTT client subscribe → status gate → packet
-  * decode → partitioned point store, with the LIVE windowed rollup query
-  * and the reference's `run_example` query running against the result.
-  * This is the composition test the individual stage specs
-  * (`StreamingIngestSpec`, `StreamingQueryBuilderSpec`, `MqttClientSpec`)
-  * don't cover: one run, every stage wired together.
+  * MATE publisher → TCP loopback broker → MQTT client subscribe over a
+  * real socket → status gate → packet decode → partitioned point store,
+  * with the LIVE windowed rollup query and the reference's `run_example`
+  * query running against the result. This is the composition test the
+  * individual stage specs (`StreamingIngestSpec`,
+  * `StreamingQueryBuilderSpec`, `MqttSocketClientSpec`) don't cover: one
+  * run, every stage wired together.
   */
 class SolarMainSpec extends AnyFunSuite {
   lazy val spark = GraftSession.get("local[4]")
 
   test("SolarMain.run: publisher → ingest → rollup → query, end to end") {
     val bucket = java.nio.file.Files.createTempDirectory("solarmain").toString + "/bucket"
-    val r = SolarMain.run(spark, bucket, seconds = 3, useSocket = false, periodMs = 50L)
+    val r = SolarMain.run(spark, bucket, seconds = 3, periodMs = 50L)
 
     // the pipeline ingested real decoded points, across >1 device family
     assert(r.points > 0, "no points ingested")
@@ -43,7 +44,7 @@ class SolarMainSpec extends AnyFunSuite {
 
   test("SolarMain.run over the real TCP loopback transport") {
     val bucket = java.nio.file.Files.createTempDirectory("solarmaintcp").toString + "/bucket"
-    val r = SolarMain.run(spark, bucket, seconds = 2, useSocket = true, periodMs = 50L)
+    val r = SolarMain.run(spark, bucket, seconds = 2, periodMs = 50L)
     assert(r.points > 0 && r.deadLetters === 0)
     assert(r.connects >= 1 && r.subscribes >= 1)
     assert(r.rollupRows > 0)

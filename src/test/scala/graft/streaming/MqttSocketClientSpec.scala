@@ -5,13 +5,14 @@ import graft.solar.{SolarSynth, Topics}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** [[MqttClientSpec]]'s scenarios re-run against the REAL transport: a
-  * [[MqttSocketClient]] speaking MQTT 3.1.1 over a loopback TCP socket to
-  * [[LoopbackBroker]]. Connect/auth-failure/unavailable/drop/reconnect
-  * mirror the reference connector (`/root/reference/src/classes/
-  * mqtt_classes.py:298-324`); delivery is asynchronous on the reader
-  * thread, so assertions await with a deadline instead of assuming
-  * same-thread effects.
+/** Drives the MQTT client seam where the reference's tests mock paho
+  * (`/root/reference/tests/classes/test_mqtt_classes.py:105-560`), on the
+  * REAL transport: a [[MqttSocketClient]] speaking MQTT 3.1.1 over a
+  * loopback TCP socket to [[LoopbackBroker]]. Connect/auth-failure/
+  * unavailable/TLS-handshake/drop/reconnect mirror the reference connector
+  * (`/root/reference/src/classes/mqtt_classes.py:298-324`); delivery is
+  * asynchronous on the reader thread, so assertions await with a deadline
+  * instead of assuming same-thread effects.
   */
 class MqttSocketClientSpec extends AnyFunSuite {
   lazy val spark = GraftSession.get("local[4]")
@@ -47,6 +48,10 @@ class MqttSocketClientSpec extends AnyFunSuite {
       client.disconnect()
       assert(!client.isConnected)
       assert(bridge.events.kinds.takeRight(2) === Seq("socket_close", "disconnect"))
+      // after a clean disconnect nothing is delivered
+      broker.publish(Topics.FxData, fx)
+      Thread.sleep(50)
+      assert(MqttSimBroker.size(log) === 1)
     } finally broker.close()
   }
 
@@ -60,6 +65,36 @@ class MqttSocketClientSpec extends AnyFunSuite {
       assert(MqttReturnCode.describe(rc) === "Connection refused - bad username or password")
       assert(!client.isConnected)
       assert(bridge.events.count("subscribe") === 0)
+      assert(bridge.events.kinds.contains("socket_close"))
+    } finally broker.close()
+  }
+
+  test("TLS client against the plain broker: bounded handshake, rc=3; malformed CONNECT closed") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val broker = new LoopbackBroker("solar", "tok123")
+    try {
+      // the stub broker does not terminate TLS: the handshake must fail
+      // (or time out) inside connect, never block the caller
+      val client = new MqttSocketClient()
+      val bridge = new IngestBridge(client, s"slog-${System.nanoTime()}", "mate/#")
+      val tlsCfg = cfgFor(broker).copy(useTls = true)
+      val rc = Await.result(Future(client.connect(tlsCfg, bridge)), 10.seconds)
+      assert(rc === MqttReturnCode.ServerUnavailable)
+      assert(bridge.events.all.exists(e => e.kind == "connect" && e.code == 3))
+      assert(!client.isConnected)
+      assert(bridge.events.kinds.containsSlice(Seq("socket_open", "socket_close")))
+
+      // a malformed CONNECT (remaining length 1, truncated protocol name):
+      // the broker closes the socket instead of leaving it open unanswered
+      val raw = new java.net.Socket("127.0.0.1", broker.port)
+      try {
+        raw.setSoTimeout(5000)
+        raw.getOutputStream.write(Array[Byte](0x10, 0x01, 0x00))
+        raw.getOutputStream.flush()
+        assert(raw.getInputStream.read() === -1)
+      } finally raw.close()
     } finally broker.close()
   }
 
