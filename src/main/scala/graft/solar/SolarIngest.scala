@@ -31,8 +31,8 @@ object Topics {
   * 100 TB this is a shuffle-free narrow pipeline (the only shuffles are in
   * whatever aggregation runs downstream).
   *
-  * Malformed payloads (too short for their struct) decode to NULL and are
-  * split to a dead-letter frame rather than killing the job — the batch
+  * Malformed payloads (shorter than their packet's full length) are split
+  * to a dead-letter frame, whole, rather than killing the job — the batch
   * upgrade of the reference's log-and-swallow policy (T6, `mqtt_classes
   * .py:289-296`).
   */
@@ -66,16 +66,29 @@ object SolarIngest {
         col("*"))
   }
 
+  /** Full message length per data topic: time prefix, struct and pad. */
+  private val messageLength: Map[String, Int] = Map(
+    Topics.DcData -> (Packets.TimeSize + Packets.DcStructLen + Packets.DcPad),
+    Topics.FxData -> (Packets.TimeSize + Packets.FxStructLen + Packets.FxPad),
+    Topics.MxData -> (Packets.TimeSize + Packets.MxStructLen + Packets.MxPad))
+
+  /** A data row whose payload is missing or shorter than its packet's full
+    * length. The reference's decoder rejects such a packet whole (T6), so
+    * none of its fields is stored, even those a short body still holds. */
+  val truncated: Column = messageLength.map { case (topic, n) =>
+    col("topic") === topic && coalesce(length(col("payload")) < n, lit(true))
+  }.reduce(_ || _)
+
   /** Long-format points from raw messages (no status gating). */
   def points(raw: DataFrame): DataFrame =
     decoded(raw)
-      .filter(col("time").isNotNull)
+      .filter(!truncated)
       .select(col("measurement"), col("time"), explode(col("fields")).as(Seq("field", "value")))
       .filter(col("value").isNotNull)
 
-  /** Rows whose payload failed to decode (dead-letter channel, T6). */
+  /** Rows whose payload is cut short (dead-letter channel, T6). */
   def deadLetter(raw: DataFrame): DataFrame =
-    decoded(raw).filter(col("time").isNull)
+    decoded(raw).filter(truncated)
 
   /** Status gate (F2, `mqtt_classes.py:187-198,229-294`): a data message
     * passes only if, as of its arrival, the per-device status topic AND the

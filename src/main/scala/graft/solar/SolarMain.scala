@@ -151,9 +151,12 @@ object SolarMain {
     val rollupRows =
       try spark.read.parquet(rollupDir).count()
       catch { case _: Throwable => 0L }
+    // the sink writes the dead-letter directory only when a packet is cut
+    val deadPath = new org.apache.hadoop.fs.Path(bucket + "_deadletter")
     val deadLetters =
-      try spark.read.parquet(bucket + "_deadletter").count()
-      catch { case _: Throwable => 0L } // absent dir = zero dead letters
+      if (deadPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(deadPath))
+        spark.read.parquet(deadPath.toString).count()
+      else 0L
 
     // the reference's canned query (influx_query.py:88-100) over live
     // data, dispatched through the config-driven execute path

@@ -20,6 +20,9 @@ final class LoopbackBroker(user: String, password: String) {
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[LoopbackBroker])
   private val server = new ServerSocket(0, 8, java.net.InetAddress.getByName("127.0.0.1"))
   @volatile var up = true
+  /** Set by [[close]]; a connection that reaches the broker after it is
+    * set is not served. */
+  @volatile private var closed = false
   val port: Int = server.getLocalPort
 
   private final class Conn(val socket: Socket) {
@@ -53,11 +56,16 @@ final class LoopbackBroker(user: String, password: String) {
 
   private val acceptor = new Thread(() => {
     try {
-      while (!server.isClosed) {
+      while (!closed) {
+        // a blocked accept() can still hand back a connection that landed
+        // while close() ran: the listening socket lives until it returns
         val s = server.accept()
-        val t = new Thread(() => serve(s), "loopback-broker-conn")
-        t.setDaemon(true)
-        t.start()
+        if (closed) s.close()
+        else {
+          val t = new Thread(() => serve(s), "loopback-broker-conn")
+          t.setDaemon(true)
+          t.start()
+        }
       }
     } catch { case _: IOException => () }
   }, "loopback-broker-accept")
@@ -79,7 +87,7 @@ final class LoopbackBroker(user: String, password: String) {
       val u = if ((flags & 0x80) != 0) MqttWire.readStr(body) else ""
       val p = if ((flags & 0x40) != 0) MqttWire.readStr(body) else ""
       val rc =
-        if (!up) MqttReturnCode.ServerUnavailable
+        if (!up || closed) MqttReturnCode.ServerUnavailable
         else if (u != user || p != password) MqttReturnCode.BadCredentials
         else MqttReturnCode.Accepted
       MqttWire.write(out, MqttWire.CONNACK, Array[Byte](0, rc.toByte))
@@ -351,8 +359,12 @@ final class LoopbackBroker(user: String, password: String) {
     conns.clear()
   }
 
+  /** Stop accepting, wait for the acceptor to exit (after which the port
+    * refuses connections), then sever every live connection. */
   def close(): Unit = {
-    dropAll()
+    closed = true
     try server.close() catch { case _: IOException => () }
+    acceptor.join()
+    dropAll()
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util
 import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -28,12 +29,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * swapping in a real network client implements one trait, nothing in the
   * Spark contract changes.
   *
-  * Each batch is a single input partition: one MQTT subscription is a
-  * serial stream (broker delivery order is the reference's ordering
-  * semantics, §2.9 T4), and the downstream decode/explode parallelizes
-  * after the gate. Restart-safety comes from offsets in the checkpoint —
-  * `deserializeOffset` + `planInputPartitions(start, end)` replay the
-  * uncommitted slice.
+  * Each row carries its `index` in the log. One MQTT subscription is a
+  * serial stream, so the index is broker delivery order, the reference's
+  * ordering semantics (§2.9 T4); the status gate orders by it, not by
+  * arrival, which leaves [[MqttSimStream]] free to split a batch. Restart
+  * safety comes from offsets in the checkpoint — `deserializeOffset` +
+  * `planInputPartitions(start, end)` replay the uncommitted slice.
   */
 object MqttSimBroker {
   final case class Msg(topic: String, payload: Array[Byte], arrivalMicros: Long)
@@ -70,7 +71,8 @@ object MqttSimTable {
   val schema: StructType = StructType(Seq(
     StructField("topic", StringType),
     StructField("payload", BinaryType),
-    StructField("arrival", TimestampType)))
+    StructField("arrival", TimestampType),
+    StructField("index", LongType)))
 }
 
 class MqttSimTable(broker: String) extends Table with SupportsRead {
@@ -95,13 +97,18 @@ case class IndexOffset(index: Long) extends Offset {
   override def json(): String = index.toString
 }
 
-/** @param maxPerTrigger backpressure bound (SURVEY §2.9 T5): the
+/** `planInputPartitions` cuts a batch into contiguous index ranges, one
+  * per 4,096 messages up to the core count: a drained backlog decodes on
+  * every core, a live batch of a few hundred messages stays one partition.
+  *
+  * @param maxPerTrigger backpressure bound (SURVEY §2.9 T5): the
   *   reference blocks its producer at 150 queued points; here the
   *   admission-control API caps how much of the backlog one micro-batch
   *   admits, so a large backlog drains in bounded batches instead of one
   *   giant catch-up batch. */
 class MqttSimStream(broker: String, maxPerTrigger: Option[Long])
     extends MicroBatchStream with SupportsAdmissionControl {
+  private val RowsPerPartition = 4096L
   /** The progress events' source description. */
   override def toString: String = s"MqttSimStream[$broker]"
   override def initialOffset(): Offset = IndexOffset(0L)
@@ -124,21 +131,28 @@ class MqttSimStream(broker: String, maxPerTrigger: Option[Long])
 
   override def reportLatestOffset(): Offset = IndexOffset(MqttSimBroker.size(broker))
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    Array(MqttSimPartition(
-      broker,
-      start.asInstanceOf[IndexOffset].index,
-      end.asInstanceOf[IndexOffset].index))
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val from = start.asInstanceOf[IndexOffset].index
+    val n = end.asInstanceOf[IndexOffset].index - from
+    val cores = SparkSession.active.sparkContext.defaultParallelism.toLong
+    val parts = math.max(1L, math.min(cores, (n + RowsPerPartition - 1) / RowsPerPartition))
+    Array.tabulate(parts.toInt) { i =>
+      MqttSimPartition(broker, from + n * i / parts, from + n * (i + 1) / parts)
+    }
+  }
 
   override def createReaderFactory(): PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
       val p = partition.asInstanceOf[MqttSimPartition]
       new PartitionReader[InternalRow] {
-        private val msgs = MqttSimBroker.slice(p.broker, p.from, p.until).iterator
-        private var current: MqttSimBroker.Msg = _
+        private val msgs =
+          MqttSimBroker.slice(p.broker, p.from, p.until).iterator.zip(Iterator.iterate(p.from)(_ + 1))
+        private var current: (MqttSimBroker.Msg, Long) = _
         override def next(): Boolean = { val h = msgs.hasNext; if (h) current = msgs.next(); h }
-        override def get(): InternalRow =
-          InternalRow(UTF8String.fromString(current.topic), current.payload, current.arrivalMicros)
+        override def get(): InternalRow = {
+          val (m, i) = current
+          InternalRow(UTF8String.fromString(m.topic), m.payload, m.arrivalMicros, i)
+        }
         override def close(): Unit = ()
       }
     }

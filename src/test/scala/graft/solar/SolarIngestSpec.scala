@@ -45,6 +45,23 @@ class SolarIngestSpec extends AnyFunSuite {
       .map(_.getString(0)).toSeq === Seq("fx-1"))
   }
 
+  test("dead letter: a packet cut inside its body goes out whole, no partial fields") {
+    val fx = SolarSynth.encodeFx(1700000000L, 5)
+    val dc = SolarSynth.encodeDc(1700000000L, 5)
+    val raw = Seq(
+      (Topics.FxData, fx, ts("2024-01-01 00:00:00")),
+      (Topics.FxData, fx.take(Packets.TimeSize + 6), ts("2024-01-01 00:00:01")),
+      (Topics.DcData, dc.take(Packets.TimeSize + Packets.DcStructLen - 1), ts("2024-01-01 00:00:02")),
+      (Topics.FxData, fx.dropRight(1), ts("2024-01-01 00:00:03")), // pad cut
+      (Topics.MxData, SolarSynth.encodeMx(1700000000L, 5), ts("2024-01-01 00:00:04"))
+    ).toDF("topic", "payload", "arrival")
+    assert(SolarIngest.deadLetter(raw).select("arrival").collect().map(_.getTimestamp(0)).toSet ===
+      Set(ts("2024-01-01 00:00:01"), ts("2024-01-01 00:00:02"), ts("2024-01-01 00:00:03")))
+    val pts = SolarIngest.points(raw)
+    assert(pts.count() === 14 + 10)
+    assert(pts.filter($"measurement" === Topics.DcName).count() === 0)
+  }
+
   test("status gate: device and mate gating in arrival order") {
     val epoch = 1700000000L
     def at(s: Int) = ts(s"2024-01-01 00:00:${"%02d".format(s)}")

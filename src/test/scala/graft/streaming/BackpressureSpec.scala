@@ -71,9 +71,9 @@ class BackpressureSpec extends AnyFunSuite {
       assert(b.addBatchMs === p.durationMs.get("addBatch").longValue)
       assert(b.stateCommitMs === p.stateOperators.map(_.commitTimeMs).sum)
       assert(b.triggerMs > 0 && b.addBatchMs > 0)
-      assert(b.stateRows === 3) // one gate row per device
+      assert(b.stateRows === 0) // the gate keeps no state store
     }
     val line = listener.summary(b => b.source == s"MqttSimStream[$broker]" && b.numInputRows > 0)
-    assert(line.startsWith(s"batches=${stats.size} ") && line.endsWith("state_rows=3"), line)
+    assert(line.startsWith(s"batches=${stats.size} ") && line.endsWith("state_rows=0"), line)
   }
 }

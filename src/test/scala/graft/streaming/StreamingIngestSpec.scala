@@ -5,9 +5,10 @@ import graft.solar.{PointStore, SolarSynth, Topics}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the full streaming pipeline through the custom mqtt-sim
-  * MicroBatchStream: publish → micro-batch → stateful gate → decode →
-  * checkpointed parquet append; verifies cross-batch state carryover and
-  * offset-based restart (no reprocessing, no loss).
+  * MicroBatchStream: publish → micro-batch → status gate → decode →
+  * checkpointed parquet append; verifies cross-batch flag carry-over,
+  * delivery-order gating, dead letters and offset-based restart (no
+  * reprocessing, no loss, a replayed batch recomputed identically).
   */
 class StreamingIngestSpec extends AnyFunSuite {
   lazy val spark = GraftSession.get("local[4]")
@@ -135,7 +136,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"${bucket}_deadletter")))
   }
 
-  test("stream: one state operator, one state row per device") {
+  test("stream: no state operator") {
     val (broker, bucket, chk) = fresh("state")
     MqttSimBroker.publish(broker, Topics.DcStatus, "online".getBytes, us(0))
     MqttSimBroker.publish(broker, Topics.FxStatus, "online".getBytes, us(1))
@@ -146,7 +147,98 @@ class StreamingIngestSpec extends AnyFunSuite {
     q.processAllAvailable()
     q.stop()
     val ops = q.recentProgress.filter(_.numInputRows > 0).last.stateOperators
-    assert(ops.length === 1)
-    assert(ops.head.numRowsTotal === 3)
+    assert(ops.isEmpty)
+  }
+
+  test("stream: delivery order beats the arrival stamp") {
+    val (broker, bucket, chk) = fresh("order")
+    val fx = SolarSynth.encodeFx(epoch, 6)
+    MqttSimBroker.publish(broker, Topics.MateStatus, "online".getBytes, us(0))
+    MqttSimBroker.publish(broker, Topics.FxStatus, "online".getBytes, us(1))
+    MqttSimBroker.publish(broker, Topics.FxData, fx, us(2)) // passes
+    MqttSimBroker.publish(broker, Topics.MateStatus, "offline".getBytes, us(9))
+    // delivered after the mate went offline, though stamped before it:
+    // dropped, as the reference's callbacks see it
+    MqttSimBroker.publish(broker, Topics.FxData, fx, us(5))
+
+    val q = StreamingIngest.start(spark, broker, bucket, chk)
+    q.processAllAvailable()
+    q.stop()
+    assert(PointStore.read(spark, bucket).count() === 14)
+  }
+
+  private def rmTree(path: String): Unit = {
+    val f = new java.io.File(path)
+    if (f.isDirectory) f.listFiles().foreach(c => rmTree(c.getPath))
+    f.delete()
+  }
+
+  test("stream: a restart replays an uncommitted batch identically") {
+    val (broker, bucket, chk) = fresh("replay")
+    val q = StreamingIngest.start(spark, broker, bucket, chk)
+    MqttSimBroker.publish(broker, Topics.MateStatus, "online".getBytes, us(0))
+    MqttSimBroker.publish(broker, Topics.MxStatus, "online".getBytes, us(1))
+    MqttSimBroker.publish(broker, Topics.MxData, SolarSynth.encodeMx(epoch, 5), us(2))
+    q.processAllAvailable() // batch N-1
+    // batch N: no status rows; its packet passes only through carried flags
+    MqttSimBroker.publish(broker, Topics.MxData, SolarSynth.encodeMx(epoch + 60, 6), us(3))
+    q.processAllAvailable()
+    q.stop()
+    assert(PointStore.read(spark, bucket).count() === 20)
+
+    // lose batch N's commit and the whole bucket, as a crash between the
+    // sink write and the commit would, then restart
+    val n = new java.io.File(s"$chk/commits").list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    new java.io.File(s"$chk/commits/$n").delete()
+    new java.io.File(s"$chk/commits/.$n.crc").delete()
+    rmTree(bucket)
+    val q2 = StreamingIngest.start(spark, broker, bucket, chk)
+    q2.processAllAvailable()
+    q2.stop()
+    val pts = PointStore.read(spark, bucket)
+    assert(pts.count() === 10)
+    assert(pts.filter(org.apache.spark.sql.functions.col("time") =!=
+      new java.sql.Timestamp((epoch + 60) * 1000)).count() === 0)
+  }
+
+  test("stream: a checkpoint with commits but no gate log refuses to start") {
+    val (broker, bucket, chk) = fresh("oldlayout")
+    MqttSimBroker.publish(broker, Topics.MateStatus, "online".getBytes, us(0))
+    val q = StreamingIngest.start(spark, broker, bucket, chk)
+    q.processAllAvailable()
+    q.stop()
+    rmTree(s"$chk/gate")
+    val e = intercept[IllegalStateException](StreamingIngest.start(spark, broker, bucket, chk))
+    assert(e.getMessage.contains("delete it"), e.getMessage)
+  }
+
+  test("stream: a packet cut inside its body is dead-lettered whole") {
+    val (broker, bucket, chk) = fresh("cut")
+    val fx = SolarSynth.encodeFx(epoch, 8)
+    MqttSimBroker.publish(broker, Topics.MateStatus, "online".getBytes, us(0))
+    MqttSimBroker.publish(broker, Topics.FxStatus, "online".getBytes, us(1))
+    MqttSimBroker.publish(broker, Topics.FxData, fx, us(2)) // passes
+    MqttSimBroker.publish(broker, Topics.FxData, fx.take(10), us(3)) // time intact, body cut
+    MqttSimBroker.publish(broker, Topics.FxData, fx.dropRight(1), us(4)) // pad cut
+    MqttSimBroker.publish(broker, Topics.MxData, Array[Byte](1, 2, 3, 4, 5), us(5)) // mx offline
+
+    val q = StreamingIngest.start(spark, broker, bucket, chk)
+    q.processAllAvailable()
+    q.stop()
+    assert(PointStore.read(spark, bucket).count() === 14)
+    val dead = spark.read.parquet(s"${bucket}_deadletter")
+    assert(dead.columns.toSeq === Seq("topic", "payload", "arrival"))
+    assert(dead.collect().map(_.getAs[Array[Byte]]("payload").length).sorted.toSeq ===
+      Seq(10, fx.length - 1))
+  }
+
+  test("source: a batch splits into contiguous index ranges, at most one per core") {
+    spark // the active session supplies the core count (local[4])
+    val s = new MqttSimStream("split", None)
+    def ranges(n: Long) = s.planInputPartitions(IndexOffset(10), IndexOffset(10 + n)).toSeq
+      .map { case p: MqttSimPartition => (p.from, p.until) }
+    assert(ranges(300) === Seq((10, 310)))
+    assert(ranges(10000) === Seq((10, 3343), (3343, 6676), (6676, 10010)))
+    assert(ranges(120000) === Seq((10, 30010), (30010, 60010), (60010, 90010), (90010, 120010)))
   }
 }
