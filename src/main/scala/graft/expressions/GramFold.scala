@@ -35,7 +35,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, Decimal}
   * Scale shape: the ONLY fact-scale state is one `long[dim(dim+1)]` per
   * task (64 KiB at dim=64); the shuffle carries one serialized buffer per
   * partition. Input vectors must be dense, non-null, and exactly `dim`
-  * long — enforced loudly (the Quantiles-guard discipline).
+  * long — enforced loudly: a bad input fails the query rather than
+  * folding into a wrong result.
   */
 case class GramFold(
     child: Expression,

@@ -1,40 +1,36 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
 import org.apache.spark.sql.functions._
 
-/** Exact distributed order statistics.
+/** Exact distributed order statistics: per key, the value at rank p·(m−1)
+  * among the key's m non-NULL values, linearly interpolated — the
+  * definition of Spark's `percentile` and DuckDB's `quantile_cont`. That
+  * built-in buffers a whole group in one aggregation buffer (6.7 s at
+  * sf0.1, OOM at scale); this operator holds at most a narrow band of each
+  * group, in three steps:
   *
-  * Spark's built-in exact `percentile` aggregate buffers EVERY value of a
-  * group inside one aggregation buffer and sorts it there — with a handful
-  * of huge groups (per-flag percentiles over a fact table) that is three
-  * tasks each holding a third of the table: measured 6.7 s at sf0.1 where
-  * the whole rest of the battery runs in ~1 s, and a straight OOM at
-  * 100 TB.
+  *  1. Bracket. One aggregate per key computes n = count(*), m = count(v)
+  *     and `percentile_approx` at p ± 2/A for every p (clamped to [0, 1]),
+  *     A = Spark's default accuracy. Its Greenwald–Khanna summary (SIGMOD
+  *     2001) bounds the rank error by m/A, so the exact rank lies between
+  *     the two returned sample values lo ≤ hi.
+  *  2. Count the band. One aggregate over the data, joined to the
+  *     broadcast brackets with a null-safe key match, records per quantile
+  *     the counts below lo, equal to lo and equal to hi, the values strictly
+  *     inside (lo, hi) — O(m/A) of them — and the predecessor max(v < lo)
+  *     and successor min(v > hi). The widening by one rank on each side is
+  *     needed: an uncompressed small-m summary answers rank ⌈q·m⌉, which
+  *     can sit one rank past ⌊p·(m−1)⌋ or one short of ⌈p·(m−1)⌉.
+  *  3. Select. The floor and ceil target ranks are read from the widened
+  *     band (inside values via `array_sort`) and interpolated. A target
+  *     rank outside the band fails the query through `assert_true`: the
+  *     operator never returns a wrong value.
   *
-  * This operator computes the same exact interpolated quantiles with a
-  * distributed sort instead: range-repartition by (key, value) +
-  * within-partition sort gives a total order across partitions. The global
-  * rank is derived WITHOUT an RDD `zipWithIndex` hop (which costs an extra
-  * pass just to learn partition sizes, and whose `.rdd` boundary boxes
-  * every row out of Tungsten — measured cpu_ratio ≈ 2.5 on 32 cores):
-  * each row is stamped inside the sorted stage with its partition id and
-  * `monotonically_increasing_id` (= pid·2³³ + within-partition counter,
-  * assigned in sorted order — nondeterministic expressions are never
-  * pushed below a sort), the stamped frame is cached ONCE, and ranks are
-  * recovered from one tiny `(pid, k)`-grain aggregate. The requested
-  * quantiles then select the two bracketing ranks per key in a SINGLE
-  * join against the cache (lo and hi exploded together) and interpolate
-  * `lo + (hi − lo)·frac` — the same definition DuckDB's `quantile_cont`
-  * and Spark's `percentile` use (rank p·(n−1), linear interpolation).
-  * The quantile extraction folds into ONE hash aggregate (conditional
-  * max per requested quantile) — no separate pivot pass.
-  *
-  * Per-partition offsets come from a `(pid)`-grain aggregate + a
-  * ~|partitions|-row prefix-sum window, joined back broadcast: every
-  * bookkeeping frame is at most |partitions| or
-  * |partitions × keys-per-partition| rows, and nothing assumes the key
-  * domain is small.
+  * NULL values take no rank; a key whose values are all NULL gets NULL
+  * quantiles. n stays the key's row count, NULLs included. A NULL key is a
+  * group of its own. No window, sort or cache is planned.
   */
 object Quantiles {
 
@@ -52,114 +48,53 @@ object Quantiles {
       ps: Seq[Double],
       names: Seq[String]): DataFrame = {
     require(ps.nonEmpty && ps.length == names.length)
-    val spark = df.sparkSession
-    import org.apache.spark.sql.expressions.Window
-
+    val accuracy = ApproximatePercentile.DEFAULT_PERCENTILE_ACCURACY
     val base = df.select(col(key).as("k"), col(value).cast("double").as("v"))
-    // EXPLICIT partition count: a user-pinned count is exempt from AQE
-    // partition coalescing, so a cache-miss recompute of any partition
-    // reproduces identical (pid, mid) stamps (range boundaries come from
-    // fixed-seed sampling — deterministic). Under the default, AQE was
-    // free to coalesce separate executions differently and desync the
-    // pids the offsets are keyed on (observed: 7 of 8 keys lost their
-    // bracketing rows).
-    val numParts = spark.sessionState.conf.numShufflePartitions
-    val stamped = graft.ScratchCache.tracked(
-      base
-        .repartitionByRange(numParts, col("k"), col("v"))
-        .sortWithinPartitions("k", "v")
-        .select(col("k"), col("v"),
-          spark_partition_id().cast("long").as("pid"),
-          monotonically_increasing_id().as("mid")))
-    // MATERIALIZED with one cheap count() BEFORE the fan-out: persist()
-    // does not dedupe a cold frame's concurrent first computation (NOTES
-    // lesson 11b) — without it the consumers re-ran the whole range sort
-    // concurrently, measured 21 s → 8 s at a 30× corpus. The caller's
-    // ScratchCache.releaseAll() frees it after the result lands.
-    stamped.count()
-    // within-partition sequence number of a stamp
-    def seq(mid: Column2, pid: Column2): Column2 = mid - shiftleft(pid, 33)
+    val v = col("v")
+    def c(name: String, i: Int): Column = col(s"$name$i")
+    val eps = 2.0 / accuracy
+    val probes = ps.flatMap(p => Seq(math.max(0.0, p - eps), math.min(1.0, p + eps)))
+    val brackets = base.groupBy(col("k").as("bk"))
+      .agg(count(lit(1)).as("n"), count(v).as("m"),
+        percentile_approx(v, array(probes.map(lit): _*), lit(accuracy)).as("b"))
+      .select(col("bk") +: col("n") +: col("m") +: ps.indices.flatMap(i =>
+        Seq(col("b")(2 * i).as(s"lo$i"), col("b")(2 * i + 1).as(s"hi$i"))): _*)
 
-    // ONE tiny (pid, key)-grain aggregate carries all the bookkeeping:
-    // per-partition totals → exclusive-prefix-sum offsets, and per-key
-    // first-stamp/count → global start rank and n. Everything below is
-    // ~(partitions × keys-per-partition) rows — driver-free small-frame
-    // math, no second pass over the data.
-    val cnts = stamped.groupBy("pid", "k")
-      .agg(count(lit(1)).as("c"), min(col("mid")).as("mmin"))
-    // monotonically_increasing_id packs a 33-bit per-partition counter
-    // under the pid bits: a range partition reaching 2^33 rows would
-    // silently corrupt every downstream rank. Fail loudly instead. The
-    // guard is folded into the offset column (a pruned side column would
-    // be optimized away and never evaluated); assert_true is NULL on
-    // success so the coalesce leaves the offset unchanged.
-    // message deliberately avoids the operator name: "Quantiles" contains
-    // the substring "ntile", which PlanSpec greps plans for to ban NTILE
-    // windows — a guard string must not trip a plan pin
-    def overflowGuard(pn: Column2, pid: Column2): Column2 = coalesce(
-      assert_true(pn <= lit(1L << 33),
-        concat(lit("exact order statistics: range partition "), pid,
-          lit(" holds "), pn,
-          lit(" rows (>= 2^33) — (pid,mid) rank stamps would overflow; "),
-          lit("raise the partition count"))).cast("long"),
-      lit(0L))
-
-    // extents: one row per key (start rank, n); ranked: (global idx, v)
-    // for every input row, derived from the stamped cache + bookkeeping.
-    val wOff = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    // one row per partition (32ish) — the single-partition window is fine
-    val offsets = cnts.groupBy("pid").agg(sum(col("c")).as("pn"))
-      .select(col("pid"),
-        (coalesce(sum(col("pn")).over(wOff), lit(0L))
-          + overflowGuard(col("pn"), col("pid"))).as("off"))
-    val extents = cnts.join(broadcast(offsets), "pid")
-      .select(col("k"), col("c"),
-        (col("off") + seq(col("mmin"), col("pid"))).as("kstart"))
-      .groupBy("k").agg(min(col("kstart")).as("start"), sum(col("c")).as("n"))
-    val ranked = stamped
-      .join(broadcast(offsets), "pid")
-      .select((col("off") + seq(col("mid"), col("pid"))).as("idx"), col("v"))
-
-    // target ranks per key per quantile: rank p·(n−1) → floor + ceil rows,
-    // exploded into (lo, hi) bracketing rows in the same projection
-    val need = extents.select(
-      col("k"), col("n"),
-      explode(array(ps.zip(names).flatMap { case (p, nm) =>
-        val t = lit(p) * (col("n") - 1)
-        Seq(
-          struct(lit(nm).as("qname"), lit("lo").as("side"),
-            (col("start") + floor(t).cast("long")).as("idx")),
-          struct(lit(nm).as("qname"), lit("hi").as("side"),
-            (col("start") + ceil(t).cast("long")).as("idx")))
-      }: _*)).as("e"))
-      .select(col("k"), col("n"),
-        col("e.qname").as("qname"), col("e.side").as("side"), col("e.idx").as("idx"))
-
-    // SINGLE bracketing pass, quantile extraction FOLDED INTO the same
-    // hash aggregate (conditional max per (quantile, side) — each matches
-    // exactly one row per key), then interpolate per quantile with frac
-    // recomputed from the literal p and n. The old shape pivoted the
-    // (k, qname, qv) triples in a second aggregate — one exchange more
-    // than necessary.
-    // `need` is keys × quantiles × 2 rows — broadcast it EXPLICITLY: its
-    // size estimate flows through explode/joins, so without the hint the
-    // planner can fall back to shuffling the full ranked frame by rank
-    val aggs = names.flatMap { nm =>
+    val band = ps.indices.flatMap { i =>
+      val (lo, hi) = (c("lo", i), c("hi", i))
       Seq(
-        max(when(col("qname") === nm && col("side") === "lo", col("v"))).as(s"__lo_$nm"),
-        max(when(col("qname") === nm && col("side") === "hi", col("v"))).as(s"__hi_$nm"))
+        count(when(v < lo, 1)).as(s"below$i"),
+        count(when(v === lo, 1)).as(s"atlo$i"),
+        array_sort(collect_list(when(v > lo && v < hi, v))).as(s"inside$i"),
+        count(when(v === hi && hi > lo, 1)).as(s"athi$i"),
+        max(when(v < lo, v)).as(s"pred$i"),
+        min(when(v > hi, v)).as(s"succ$i"))
     }
-    val wide = ranked.join(broadcast(need), "idx")
-      .groupBy(col("k"), col("n"))
-      .agg(aggs.head, aggs.tail: _*)
-    val qvs = ps.zip(names).map { case (p, nm) =>
-      val t = lit(p) * (col("n") - 1)
-      val frac = t - floor(t)
-      (col(s"__lo_$nm") + (col(s"__hi_$nm") - col(s"__lo_$nm")) * frac).as(nm)
-    }
-    wide.select((col("k").as(key) +: col("n") +: qvs): _*)
-  }
+    val bands = base.join(broadcast(brackets), col("k") <=> col("bk"))
+      .groupBy(("k" +: brackets.columns.tail).map(col): _*)
+      .agg(band.head, band.tail: _*)
 
-  // local alias so the helper reads naturally without importing Column
-  private type Column2 = org.apache.spark.sql.Column
+    // the value at 0-based rank r, or NULL when r lies outside the band
+    def at(i: Int, r: Column): Column = {
+      val below = c("below", i)
+      val inStart = below + c("atlo", i)
+      val hiStart = inStart + size(c("inside", i))
+      val succRank = hiStart + c("athi", i)
+      when(r === below - 1, c("pred", i))
+        .when(r >= below && r < inStart, c("lo", i))
+        .when(r >= inStart && r < hiStart, element_at(c("inside", i), (r - inStart + 1).cast("int")))
+        .when(r >= hiStart && r < succRank, c("hi", i))
+        .when(r === succRank, c("succ", i))
+    }
+    val qvs = ps.zip(names).zipWithIndex.map { case ((p, nm), i) =>
+      val t = lit(p) * (col("m") - 1)
+      val (lo, hi) = (at(i, floor(t)), at(i, ceil(t)))
+      val inBand = c("lo", i) <= c("hi", i) && lo.isNotNull && hi.isNotNull
+      val msg = concat(lit(s"exact order statistic $nm of key "),
+        coalesce(col("k").cast("string"), lit("NULL")),
+        lit(" fell outside its percentile_approx band"))
+      when(col("m") > 0, coalesce(assert_true(inBand, msg), lo + (hi - lo) * (t - floor(t)))).as(nm)
+    }
+    bands.select((col("k").as(key) +: col("n") +: qvs): _*)
+  }
 }

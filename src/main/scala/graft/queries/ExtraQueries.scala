@@ -536,25 +536,22 @@ object ExtraQueries {
           .select(col("rec"), col("freq"), col("mon")))
       cust.count() // two consumers: the melted quantile pass + scoring
       // ONE order-statistics pass for all three dimensions: melt to
-      // (dim, value) and let the operator's group key separate them —
-      // one range sort instead of three
+      // (dim, value) and let the operator's group key separate them
       val melted = cust.select(explode(array(
         struct(lit("rec").as("dim"), col("rec").as("v")),
         struct(lit("freq").as("dim"), col("freq").as("v")),
         struct(lit("mon").as("dim"), col("mon").as("v")))).as("x"))
         .select(col("x.dim").as("dim"), col("x.v").as("v"))
-      val q = graft.ScratchCache.tracked(graft.operators.Quantiles
-        .exact(melted, "dim", "v", Seq(0.2, 0.4, 0.6, 0.8), Seq("c1", "c2", "c3", "c4")))
-      q.count() // three consumers (one filtered single-row frame per dimension)
-      def row(dim: String, names: Seq[String]) = broadcast(
-        q.filter(col("dim") === dim)
-          .select((1 to 4).map(i => col(s"c$i").as(names(i - 1))): _*))
-      val r = row("rec", Seq("r1", "r2", "r3", "r4"))
-      val f = row("freq", Seq("f1", "f2", "f3", "f4"))
-      val m = row("mon", Seq("m1", "m2", "m3", "m4"))
+      val q = graft.operators.Quantiles
+        .exact(melted, "dim", "v", Seq(0.2, 0.4, 0.6, 0.8), Seq("c1", "c2", "c3", "c4"))
+      // all twelve cuts in ONE broadcast row, so q has a single consumer
+      val cutCols = Seq("rec" -> "r", "freq" -> "f", "mon" -> "m").flatMap { case (dim, p) =>
+        (1 to 4).map(i => max(when(col("dim") === dim, col(s"c$i"))).as(s"$p$i"))
+      }
+      val cuts = broadcast(q.agg(cutCols.head, cutCols.tail: _*))
       def score(dim: String, cs: Seq[String]) = cs.map(c =>
         (col(dim) > col(c)).cast("int")).reduce(_ + _) + 1
-      val seg = cust.crossJoin(r).crossJoin(f).crossJoin(m)
+      val seg = cust.crossJoin(cuts)
         .withColumn("r_score", lit(6) - score("rec", Seq("r1", "r2", "r3", "r4")))
         .withColumn("f_score", score("freq", Seq("f1", "f2", "f3", "f4")))
         .withColumn("m_score", score("mon", Seq("m1", "m2", "m3", "m4")))

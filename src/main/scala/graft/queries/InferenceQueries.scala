@@ -106,8 +106,8 @@ object InferenceQueries {
     * Scale: orders collapse to customer grain FIRST (fact-scale groupBy,
     * map-side combined), so the ranked frame is |customer| rows — the
     * per-nation row_number sorts a dimension, not the fact table. If one
-    * nation's customer count ever outgrew a task, the drop-in is the
-    * [[graft.operators.Quantiles]] range-sort global rank (same
+    * nation's customer count ever outgrew a task, the drop-in is a
+    * distributed range sort with per-partition rank offsets (same
     * decomposition, no per-key sort). */
   val qGini: Q = Q.sql(
     "q_gini",

@@ -318,8 +318,9 @@ object RankQueries {
     * language-balanced quality partition a crawl pipeline trains from.
     *
     * Scale design: tertile cut points come from
-    * [[graft.operators.Quantiles.exact]] (distributed range-sort order
-    * statistics) broadcast back for a comparison-only bin assignment — a
+    * [[graft.operators.Quantiles.exact]] (an approximate bracket, then an
+    * exact pick from a narrow per-language band) broadcast back for a
+    * comparison-only bin assignment — a
     * per-language Window sort over every doc (the q_ntile hazard) never
     * exists in the plan. Parity: bucketing compares the ROUNDED score,
     * i.e. exactly the bits the q_bigram_lm gate hash-pins; min/max per

@@ -2435,8 +2435,8 @@ object SimilarityQueries {
   /** Packed 1-D grid key for a (`cx`, `cy`) cell pair. The key spans
     * ±2²⁰ cells per axis (±52k embedding units at 0.05 width) and FAILS
     * LOUDLY beyond it in both engines — a silent collision would merge
-    * unrelated clusters (the Quantiles-guard convention: the assert is
-    * folded into the value so column pruning can't skip it). Factored
+    * unrelated clusters (the assert is folded into the value so column
+    * pruning can't skip it). Factored
     * out so OverflowBoundarySpec can drive the production guard at and
     * past the packing boundary. */
   private[queries] def dbscanPackedCell: Column = {

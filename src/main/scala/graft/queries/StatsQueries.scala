@@ -34,8 +34,9 @@ object StatsQueries {
     doc = "exact interpolated percentiles per group (distributed order statistics)") { (s, d) =>
     // NOT the built-in exact `percentile`: that buffers every group value
     // in one aggregation buffer (3 giant groups = 3 tasks holding the
-    // table; 6.7 s at sf0.1, OOM at scale). Quantiles.exact runs the same
-    // math over a distributed range sort — see the operator's Scaladoc.
+    // table; 6.7 s at sf0.1, OOM at scale). Quantiles.exact gives the same
+    // answer from an approximate bracket and a narrow per-group band — see
+    // the operator's Scaladoc.
     graft.operators.Quantiles
       .exact(lineitem(s, d), "l_returnflag", "l_extendedprice",
         Seq(0.5, 0.9, 0.99), Seq("p50", "p90", "p99"))
@@ -423,10 +424,12 @@ object StatsQueries {
     * constant that makes MAD estimate σ under normality).
     *
     * Both medians run through [[graft.operators.Quantiles.exact]] —
-    * distributed range-sort order statistics, never a
-    * buffer-the-whole-group percentile. Two sort passes (values, then
-    * absolute deviations) is the honest cost of exact MAD at scale; each
-    * is shuffle-bounded with no per-task group state.
+    * an approximate bracket, then an exact selection from a narrow
+    * per-group band, never a buffer-the-whole-group percentile. The MAD
+    * depends on the median, so the two run one after the other: values,
+    * then absolute deviations. Neither is cached: each plan is two small
+    * aggregates, cheaper to re-run for its consumers than a persist plus
+    * the count() that would materialize it.
     *
     * Float parity is by construction, not hope: values quantize to exact
     * integer cents first (the q_anomaly trick), so every interpolated
@@ -454,21 +457,14 @@ object StatsQueries {
     doc = "median/MAD robust outlier fence per group (two distributed order-statistic passes)") { (s, d) =>
     val c = events(s, d).select(
       col("event_type"), round(col("value") * 100).cast("long").as("v"))
-    // m is group-grain tiny but its PLAN is exact#1's whole bookkeeping
-    // pipeline; uncached it re-executes for every consumer — exact#2's
-    // range-sampling pass, exact#2's shuffle, and the final fence join
-    // each replayed it (measured: 49 jobs for this one gate). Cache +
-    // materialize (NOTES lesson 11b); same for md below.
-    val m = graft.ScratchCache.tracked(graft.operators.Quantiles
+    val m = graft.operators.Quantiles
       .exact(c, "event_type", "v", Seq(0.5), Seq("med"))
-      .select(col("event_type"), col("med")))
-    m.count()
+      .select(col("event_type"), col("med"))
     val a = c.join(broadcast(m), "event_type")
       .select(col("event_type"), abs(col("v") - col("med")).as("ad"))
-    val md = graft.ScratchCache.tracked(graft.operators.Quantiles
+    val md = graft.operators.Quantiles
       .exact(a, "event_type", "ad", Seq(0.5), Seq("mad"))
-      .select(col("event_type"), col("mad")))
-    md.count()
+      .select(col("event_type"), col("mad"))
     a.join(broadcast(m), "event_type").join(broadcast(md), "event_type")
       .groupBy(col("event_type"), col("med"), col("mad"))
       .agg(

@@ -410,8 +410,8 @@ object TimeSeriesQueries {
     * [[graft.operators.Quantiles]] exists to avoid. Exact-equal bin
     * COUNTS inherently need that order; when approximate-equal depth is
     * acceptable (nearly always at scale), [[qBinEquidepth]] is the
-    * production path: cut points from `Quantiles.exact` (distributed
-    * range sort), bins by comparison — a narrow map, no per-group sort.
+    * production path: cut points from `Quantiles.exact` (two aggregates,
+    * no sort), bins by comparison — a narrow map, no per-group sort.
     * This query keeps the exact NTILE semantics because that is the
     * operator being proved, and it serves as [[qBinEquidepth]]'s
     * semantic oracle (same bins wherever ties permit). */
@@ -446,8 +446,8 @@ object TimeSeriesQueries {
     * counterpart of [[qNtile]]. Instead of NTILE's per-flag total-order
     * sort (one task per flag holding that flag's entire history), the 3
     * quartile cut points per flag come from
-    * [[graft.operators.Quantiles.exact]] — a distributed range sort whose
-    * every stage is partition-bounded — and each row's bin is then pure
+    * [[graft.operators.Quantiles.exact]] — two aggregates that hold at
+    * most a narrow value band per flag — and each row's bin is then pure
     * comparison arithmetic against its flag's broadcast cut row: bin =
     * 1 + (v>c1) + (v>c2) + (v>c3). The heavy path over lineitem is a
     * narrow map + one hash aggregation; no Window operator and no

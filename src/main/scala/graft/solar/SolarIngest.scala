@@ -125,8 +125,9 @@ object SolarIngest {
   /** The status gate with the per-device window SEGMENTED — the form that
     * survives a 100× replay. [[gated]]'s window partitions on the device
     * key, a ~3-value column, so each task sorts a device's ENTIRE history;
-    * at 100 TB that is three giant sort tasks (the same hazard
-    * [[graft.operators.Quantiles]] exists to avoid on the query side).
+    * at 100 TB that is three giant sort tasks (the hazard that
+    * [[graft.operators.Quantiles]] avoids on the query side by never
+    * sorting a whole group).
     *
     * Here the window is keyed by (device, segment) — `segment` is any
     * deterministic monotone bucketing of `arrival` (calendar date by

@@ -333,32 +333,6 @@ object Profile {
         println(f"ivf cells=$cells probe=$probe cand=$nCand (${nCand * 2.0 / (n * (n - 1))}%.3f of all pairs) recall=${hit.toDouble / nTruth}%.3f")
         cand.unpersist()
       }
-    } else if (name == "mad_stages") {
-      // attribute the q_mad_outliers Quantiles-rework delta: time each
-      // exact() call and the final aggregate separately, warm
-      import graft.Tables._
-      import org.apache.spark.sql.functions._
-      def t[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"  $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
-      for (passNo <- 1 to 3) {
-        println(s"pass $passNo")
-        spark.catalog.clearCache()
-        val c = events(spark, sfDir).select(
-          col("event_type"), round(col("value") * 100).cast("long").as("v"))
-        val m = t("exact#1 (median)")(
-          graft.operators.Quantiles.exact(c, "event_type", "v", Seq(0.5), Seq("med"))
-            .select(col("event_type"), col("med")).collect())
-        val mDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(m.toSeq), m.head.schema)
-        val a = c.join(broadcast(mDf), "event_type")
-          .select(col("event_type"), abs(col("v") - col("med")).as("ad"))
-        t("exact#2 (mad)")(
-          graft.operators.Quantiles.exact(a, "event_type", "ad", Seq(0.5), Seq("mad"))
-            .select(col("event_type"), col("mad")).collect())
-        graft.ScratchCache.releaseAll()
-      }
     } else if (name == "gram_growth") {
       // Attribution rig for the round-9 in-battery monotone growth: run
       // the OLD declarative gram kernel (nested transform outer product →

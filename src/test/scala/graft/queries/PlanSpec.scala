@@ -16,6 +16,10 @@ class PlanSpec extends AnyFunSuite {
   private def plan(q: Q): String =
     q.run(spark, sf).queryExecution.executedPlan.toString
 
+  // the NTILE window function, not the substring: `percentile_approx`
+  // (the exact-quantile operator's bracket) contains "ntile"
+  private val ntileCall = """\bntile\(""".r
+
   test("q1_agg: shipdate predicate reaches the parquet scan; partial agg") {
     val p = plan(CoreQueries.q1Agg)
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
@@ -137,15 +141,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_bin_equidepth: no fact-grain window, no per-flag sort — cut points broadcast") {
     val p = plan(TimeSeriesQueries.qBinEquidepth)
-    assert(!p.contains("ntile"), "scale-safe binning must not plan an NTILE window")
-    // Quantiles.exact legitimately plans ONE window: the exclusive
-    // prefix-sum over the per-PARTITION row counts (≤ shuffle.partitions
-    // rows, scale-invariant). Any other window — over the fact rows or
-    // the per-key frame — is the anti-pattern this pin guards against:
-    // every Window in the plan must order by the partition id only.
-    val windowLines = p.linesIterator.filter(_.contains("Window")).toSeq
-    assert(windowLines.forall(_.contains("pid")),
-      s"unexpected fact- or key-grain window:\n${windowLines.mkString("\n")}")
+    assert(ntileCall.findFirstIn(p).isEmpty, "scale-safe binning must not plan an NTILE window")
+    val ntileWindow = spark.range(4).selectExpr("ntile(2) OVER (ORDER BY id)")
+    assert(ntileCall.findFirstIn(ntileWindow.queryExecution.executedPlan.toString).nonEmpty,
+      "the NTILE pin must match a planned ntile window")
+    assert(!p.contains("Window"), s"unexpected window in the plan:\n$p")
     assert(p.contains("BroadcastHashJoin"),
       "cut-point table must broadcast — the fact side never shuffles for the join")
   }
@@ -180,7 +180,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("q_ppl_bucket: per-language binning has no window over the scored docs") {
     val p = plan(RankQueries.qPplBucket)
-    assert(!p.contains("ntile"), "tertile binning must not plan an NTILE window")
+    assert(ntileCall.findFirstIn(p).isEmpty, "tertile binning must not plan an NTILE window")
     assert(p.contains("BroadcastHashJoin"),
       "cut-point table must broadcast back onto the scored frame")
   }
