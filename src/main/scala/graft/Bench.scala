@@ -24,9 +24,10 @@ package graft
   * SPARK_GRAFT_BENCH_NORERUN=1 disables (single-variable A/B);
   * SPARK_GRAFT_BENCH_SETTLE tunes the settle wait (default 120 s).
   *
-  * A query that throws is a failure, not a time: the stdout line names it
-  * (`n_failed`, `failed`), BENCH_PASSES.json records its error under
-  * `errors`, and the total leaves it out.
+  * A query that throws is a failure, not a time: the stdout line counts
+  * it (`n_failed`) and names it (`failed`) while the line fits its budget,
+  * BENCH_PASSES.json records its error under `errors`, and the total
+  * leaves it out.
   */
 /** The bench's self-adjudication policy, factored pure so a spec can
   * pin it: which queries earn an automatic clean re-run after the main
@@ -90,6 +91,36 @@ object Bench {
       case e: Throwable =>
         Left(e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).takeWhile(_ != '\n'))
     }
+  }
+
+  /** The stdout JSON line. Its reader keeps only the LAST 2000 chars of
+    * stdout and parses the JSON line found there, and sbt appends a
+    * ~75-char "[success] Total time" trailer after it; a line that once
+    * inlined the per-pass map overflowed that budget and could not be
+    * parsed. So the line stays within 1,900 chars: no passes, and it
+    * degrades rung by rung until it fits. At 190+ queries even 1-decimal
+    * precision overflows, so the later rungs keep only the SLOWEST queries
+    * (the informative subset — the fast tail is noise at 1 decimal
+    * anyway). The names of failed queries ride along only while the line
+    * fits; `n_failed` always stays. BENCH_PASSES.json always carries the
+    * complete battery and every error. */
+  def stdoutLine(total: Double, nQueries: Int, mins: Seq[(String, Double)],
+      failed: Seq[String], sf: String): String = {
+    def line(prec: Int, top: Option[Int], names: Boolean): String = {
+      val picked = top.fold(mins)(k => mins.sortBy(-_._2).take(k).sortBy(_._1))
+      val qs = picked
+        .map { case (k, sec) => "\"" + k + "\":" + s"%.${prec}f".format(sec) }
+        .mkString("{", ",", "}")
+      val failedNames =
+        if (names) failed.map(Verify.jsonString).mkString(",\"failed\":[", ",", "]") else ""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":$nQueries,""" +
+        f""""n_failed":${failed.size}$failedNames,"queries":$qs,"sf":"$sf"}"""
+    }
+    val rungs = (3 to 1 by -1).map(_ -> Option.empty[Int]) ++
+      Seq(96, 64, 48, 32, 16).map(k => 2 -> Some(k))
+    (rungs.map { case (p, k) => line(p, k, names = true) } ++
+      rungs.map { case (p, k) => line(p, k, names = false) })
+      .find(_.length <= 1900).getOrElse(line(2, Some(8), names = false))
   }
 
   def main(args: Array[String]): Unit = {
@@ -305,29 +336,8 @@ object Bench {
     val heapAfterMb = heapUsedMb
     val loadAvg = osBean.getSystemLoadAverage
     val total = results.map { case (n, v) => finalMin(n, v) }.sum
-    // The driver captures only the LAST 2000 chars of stdout and parses the
-    // JSON line found there; sbt appends a ~75-char "[success] Total time"
-    // trailer after it. BENCH_r03 exceeded that budget (the inline "passes"
-    // map doubled the line) and arrived as parsed:null — so the stdout line
-    // stays compact (adaptive decimal precision, no passes), and the full
-    // per-pass detail goes to a repo file instead.
-    val failedNames = errors.map(e => Verify.jsonString(e._1)).mkString("[", ",", "]")
-    def line(prec: Int, top: Option[Int]): String = {
-      val picked = top.fold(results)(k =>
-        results.sortBy { case (n, v) => -finalMin(n, v) }.take(k).sortBy(_._1))
-      val qs = picked
-        .map { case (k, v) => "\"" + k + "\":" + s"%.${prec}f".format(finalMin(k, v)) }
-        .mkString("{", ",", "}")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${selected.size},""" +
-        f""""n_failed":${errors.size},"failed":$failedNames,"queries":$qs,"sf":"$sfDir"}"""
-    }
-    // at 190+ queries even 1-decimal precision overflows the tail budget:
-    // degrade to the SLOWEST queries that fit (the informative subset —
-    // the fast tail is noise at 1 decimal anyway); BENCH_PASSES.json
-    // always carries the complete battery.
-    val out = ((3 to 1 by -1).map(line(_, None)) ++
-      Seq(96, 64, 48, 32, 16).map(k => line(2, Some(k))))
-      .find(_.length <= 1900).getOrElse(line(2, Some(8)))
+    val out = stdoutLine(total, selected.size,
+      results.map { case (n, v) => n -> finalMin(n, v) }, errors.map(_._1), sfDir)
     // every pass, not just the min: a plan-cost problem is slow in ALL
     // passes; a host-contention spike is one outlier — written to a file so
     // the stdout line stays within the driver's tail budget. gc/cpu arrays

@@ -6,31 +6,31 @@ import org.apache.spark.sql.functions._
 
 /** Exact distributed order statistics: per key, the value at rank p·(m−1)
   * among the key's m non-NULL values, linearly interpolated — the
-  * definition of Spark's `percentile` and DuckDB's `quantile_cont`. That
-  * built-in buffers a whole group in one aggregation buffer (6.7 s at
-  * sf0.1, OOM at scale); this operator holds at most a narrow band of each
-  * group, in three steps:
+  * definition of Spark's `percentile` and DuckDB's `quantile_cont`, which
+  * buffer all m values of a group (6.7 s at sf0.1, OOM at scale). Here:
   *
   *  1. Bracket. One aggregate per key computes n = count(*), m = count(v)
   *     and `percentile_approx` at p ± 2/A for every p (clamped to [0, 1]),
-  *     A = Spark's default accuracy. Its Greenwald–Khanna summary (SIGMOD
-  *     2001) bounds the rank error by m/A, so the exact rank lies between
-  *     the two returned sample values lo ≤ hi.
+  *     A = Spark's default accuracy (10,000). Its Greenwald–Khanna summary
+  *     (SIGMOD 2001) bounds the rank error by m/A, so the exact rank lies
+  *     between the two returned sample values lo ≤ hi.
   *  2. Count the band. One aggregate over the data, joined to the
   *     broadcast brackets with a null-safe key match, records per quantile
   *     the counts below lo, equal to lo and equal to hi, the values strictly
-  *     inside (lo, hi) — O(m/A) of them — and the predecessor max(v < lo)
-  *     and successor min(v > hi). The widening by one rank on each side is
-  *     needed: an uncompressed small-m summary answers rank ⌈q·m⌉, which
-  *     can sit one rank past ⌊p·(m−1)⌋ or one short of ⌈p·(m−1)⌉.
-  *  3. Select. The floor and ceil target ranks are read from the widened
-  *     band (inside values via `array_sort`) and interpolated. A target
-  *     rank outside the band fails the query through `assert_true`: the
-  *     operator never returns a wrong value.
+  *     inside (lo, hi), and the predecessor max(v < lo) and successor
+  *     min(v > hi). The one-rank widening is needed: an uncompressed small-m
+  *     summary answers rank ⌈q·m⌉, which can sit one past ⌊p·(m−1)⌋ or one
+  *     short of ⌈p·(m−1)⌉.
+  *  3. Select. Both target ranks are read from the widened band (inside
+  *     values via `array_sort`) and interpolated; a rank outside the band
+  *     fails the query through `assert_true`, never returns a wrong value.
   *
-  * NULL values take no rank; a key whose values are all NULL gets NULL
-  * quantiles. n stays the key's row count, NULLs included. A NULL key is a
-  * group of its own. No window, sort or cache is planned.
+  * Scale: each key and quantile buffers up to ~6m/A inside values in one
+  * `collect_list` (4m/A between the probes, 2m/A of sketch error): linear
+  * in m, so at a very large m per key the memory limit (or the guard) is
+  * the failure mode. The brackets (a row per key) must fit a broadcast.
+  * NULL values take no rank (all NULL: NULL quantiles); n stays the key's
+  * row count. A NULL key is a group of its own. No window, sort or cache.
   */
 object Quantiles {
 

@@ -319,8 +319,8 @@ object RankQueries {
     *
     * Scale design: tertile cut points come from
     * [[graft.operators.Quantiles.exact]] (an approximate bracket, then an
-    * exact pick from a narrow per-language band) broadcast back for a
-    * comparison-only bin assignment — a
+    * exact pick from a per-language band of ~6m/A of its m values)
+    * broadcast back for a comparison-only bin assignment — a
     * per-language Window sort over every doc (the q_ntile hazard) never
     * exists in the plan. Parity: bucketing compares the ROUNDED score,
     * i.e. exactly the bits the q_bigram_lm gate hash-pins; min/max per

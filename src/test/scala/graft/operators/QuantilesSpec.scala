@@ -38,8 +38,7 @@ class QuantilesSpec extends AnyFunSuite {
           case None => assert(g.isNullAt(g.fieldIndex(nm)), s"key=$key $nm must be NULL")
           case Some(qs) =>
             val gv = g.getAs[Double](nm)
-            assert(math.abs(gv - qs(i)) <= 1e-12 * math.max(1.0, math.abs(qs(i))),
-              s"key=$key p=${ps(i)}: $gv vs ${qs(i)}")
+            assert(math.abs(gv - qs(i)) < 1e-12, s"key=$key p=${ps(i)}: $gv vs ${qs(i)}")
         }
       }
     }
