@@ -62,8 +62,8 @@ object SolarQueries {
   /** The interleaved status/data raw stream [[qStatusGate]] feeds the
     * gate: each events row becomes exactly one raw message — a mate flip
     * (every 500th event), a device flip ('error' → offline, 'signup' →
-    * online), or a data packet. Factored out so GateSegmentationSpec can
-    * drive both gate forms over the identical stream. */
+    * online), or a data packet. Factored out so GateReplaySpec can
+    * publish the identical stream to the streaming gate. */
   def statusRaw(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val ev = events(s, d)
     val dev = col("user_id") % 3
@@ -89,12 +89,6 @@ object SolarQueries {
       timestamp_micros(col("event_id")).as("arrival"),
       col("value"))
   }
-
-  /** Segment for the synthetic micros-of-event-id arrival clock: 2^16 µs
-    * (~65 ms) buckets ≈ 65k events each — the date-per-segment analogue
-    * for a replay whose whole clock spans under a second. */
-  def statusSegment: org.apache.spark.sql.Column =
-    shiftright(unix_micros(col("arrival")), 16)
 
   /** The reference's status gate (F2) exercised end-to-end: a synthetic
     * status changelog (derived from events: 'error' rows flip devices
@@ -132,13 +126,9 @@ object SolarQueries {
     doc = "stateful status gate over an interleaved status/data stream") { (s, d) =>
     // The gate sees only (topic, payload, arrival); re-join value by arrival
     // would be brittle, so thread it through as an extra column (the gate
-    // preserves non-contract columns). The SEGMENTED gate is the benched
-    // default — the unsegmented window form survives as its equality
-    // oracle in GateSegmentationSpec; ~9 segments exist at sf0.1, so the
-    // per-(device, segment) sorts stay partition-sized where the
-    // unsegmented form sorts each device's entire replay in one task.
+    // keeps every column).
     SolarIngest
-      .gatedSegmented(statusRaw(s, d), statusSegment)
+      .gated(statusRaw(s, d))
       .withColumn(
         "dev",
         when(col("topic") === Topics.DcData, 0L)

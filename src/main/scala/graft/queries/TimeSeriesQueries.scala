@@ -505,8 +505,8 @@ object TimeSeriesQueries {
     * day (the Wh-from-W operator every solar dashboard runs). Each
     * segment contributes (v₁+v₂)/2·Δt; segments are formed by `lag` over
     * a window keyed by (series, day), so no task ever sorts more than
-    * one series-day — the segmented-window pattern the status gate uses,
-    * applied to numeric integration.
+    * one series-day — a segmented window applied to numeric
+    * integration.
     *
     * Oracle parity: `value` is exactly two-decimal (asserted against the
     * data), so each segment is computed in EXACT integer cents·µs —

@@ -78,34 +78,4 @@ object PointStore {
       .build()
     write(pts, outPath, mode)
   }
-
-  /** Compact a bucket in place: streaming `foreachBatch` appends produce
-    * one small file per partition per micro-batch; at scale the file
-    * count — not the data volume — becomes the scan bottleneck (driver
-    * listing, task-per-file scheduling). Rewrites each (measurement,
-    * date) partition to `filesPerPartition` files via a rename-aside
-    * swap: the live bucket is moved to `_old` BEFORE the compacted dir
-    * takes its place, so a crash at any point leaves a complete copy of
-    * the data on disk (`_old` or live — recovery is a rename, never a
-    * re-ingest). Concurrent readers can still observe a brief
-    * bucket-missing window between the two renames; run out-of-band with
-    * exclusive access, like a TSDB's background compaction. */
-  def compact(spark: SparkSession, bucketPath: String, filesPerPartition: Int = 1): Unit = {
-    val tmp = bucketPath + "_compacting"
-    val old = bucketPath + "_old"
-    spark.read.parquet(bucketPath)
-      .repartition(filesPerPartition, col("measurement"), col("date"))
-      .write
-      .partitionBy("measurement", "date")
-      .mode("overwrite")
-      .parquet(tmp)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bucket = new org.apache.hadoop.fs.Path(bucketPath)
-    val fs = bucket.getFileSystem(conf)
-    val oldPath = new org.apache.hadoop.fs.Path(old)
-    fs.delete(oldPath, true) // leftover from a previous crashed compact
-    fs.rename(bucket, oldPath)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), bucket)
-    fs.delete(oldPath, true)
-  }
 }

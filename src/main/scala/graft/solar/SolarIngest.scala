@@ -90,167 +90,84 @@ object SolarIngest {
   def deadLetter(raw: DataFrame): DataFrame =
     decoded(raw).filter(truncated)
 
+  /** The status gate's state after a replay: status topic → last online
+    * flag. The streaming gate stores one per micro-batch in its metadata
+    * log, as JSON `{"online":{topic: flag}}`. */
+  final case class GateFlags(online: Map[String, Boolean])
+
+  val statusTopics: Seq[String] = Topics.MateStatus +: Topics.statusTopicFor.values.toSeq
+
+  /** Devices and the mate start offline (the reference's `_status` init). */
+  val allOffline: GateFlags = GateFlags(statusTopics.map(_ -> false).toMap)
+
+  private val online = "online".getBytes("US-ASCII")
+  private val offline = "offline".getBytes("US-ASCII")
+
+  /** The reference compares the ascii payload to "online"/"offline": an
+    * exact match flips the flag, any other payload leaves it. */
+  private def flag(payload: Array[Byte], current: Boolean): Boolean =
+    if (java.util.Arrays.equals(payload, online)) true
+    else if (java.util.Arrays.equals(payload, offline)) false
+    else current
+
   /** Status gate (F2, `mqtt_classes.py:187-198,229-294`): a data message
-    * passes only if, as of its arrival, the per-device status topic AND the
-    * global `mate/status` topic last reported "online".
+    * passes only if its device's status topic AND the global `mate/status`
+    * topic last reported "online".
     *
-    * Batch semantics (SURVEY §2.9 T4): status is applied in arrival order —
-    * `last("online"-flag)` over a window keyed by device. Scale notes: the
-    * per-device gate shuffles once on the device key (status rows and data
-    * rows share the partitioning); the global mate gate would serialize on
-    * a constant key, so instead the (tiny) mate changelog becomes interval
-    * rows broadcast against the fact stream — a broadcast range join, no
-    * extra shuffle of the data.
-    */
-  def gated(raw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
-    // Per-device gate: union of a device's status+data rows, last status
-    // at-or-before each row in arrival order.
-    val keyed = raw
-      .withColumn("gate_key", deviceKeyCol)
-      .withColumn("gate_flag", statusFlagCol)
-    val w = Window
-      .partitionBy(col("gate_key"))
-      .orderBy(col("arrival"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val deviceGated = keyed
-      .withColumn("device_online", coalesce(last(col("gate_flag"), ignoreNulls = true).over(w), lit(0)))
-      .filter(col("topic").isin(Topics.statusTopicFor.keys.toSeq: _*) && col("device_online") === 1)
-      .drop("gate_key", "gate_flag", "device_online")
-
-    mateGate(deviceGated, raw)
-  }
-
-  /** The status gate with the per-device window SEGMENTED — the form that
-    * survives a 100× replay. [[gated]]'s window partitions on the device
-    * key, a ~3-value column, so each task sorts a device's ENTIRE history;
-    * at 100 TB that is three giant sort tasks (the hazard that
-    * [[graft.operators.Quantiles]] avoids on the query side by never
-    * sorting a whole group).
-    *
-    * Here the window is keyed by (device, segment) — `segment` is any
-    * deterministic monotone bucketing of `arrival` (calendar date by
-    * default; pick a bucket that yields partition-sized segments for the
-    * replay at hand) — and state crosses segment boundaries via an
-    * explicit carry-in:
-    *
-    *   1. in-segment running state: `last(flag) ignoring nulls` over
-    *      (device, segment) — each sort task holds ONE segment of one
-    *      device, never the full history;
-    *   2. per-segment final state: one hash aggregation (map-side
-    *      combined) of `max(struct(arrival, flag))` over status rows;
-    *   3. carry-in per (device, segment): latest earlier segment's final
-    *      state — a window over the tiny (device × segment) axis, joined
-    *      back BROADCAST (the fact stream is never reshuffled for it);
-    *   4. effective state = coalesce(in-segment running, carry-in,
-    *      offline) — bit-identical to the unsegmented gate wherever
-    *      arrival is a total order per device (`GateSegmentationSpec`
-    *      pins result equality against [[gated]]).
-    */
-  def gatedSegmented(raw: DataFrame, segment: Column = to_date(col("arrival"))): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
-    val keyed = raw
-      .withColumn("gate_key", deviceKeyCol)
-      .withColumn("gate_flag", statusFlagCol)
-      .withColumn("gate_seg", segment)
-
-    // (2) per-(device, segment) final status — the max-arrival non-null
-    // flag, as one aggregation. Ties on arrival resolve by flag value here
-    // vs row order in the window — identical whenever arrival is unique
-    // per device, which broker delivery order guarantees upstream.
-    val segLast = keyed
-      .filter(col("gate_flag").isNotNull)
-      .groupBy(col("gate_key"), col("gate_seg"))
-      .agg(max(struct(col("arrival"), col("gate_flag"))).as("m"))
-      .select(col("gate_key"), col("gate_seg"), col("m.gate_flag").as("seg_flag"))
-
-    // (3) carry-in over the COMPLETE segment axis — a segment holding only
-    // data rows still needs the state of the latest earlier segment, so
-    // the axis comes from all rows, not just status rows.
-    val segAxis = keyed.select(col("gate_key"), col("gate_seg")).distinct()
-    val wCarry = Window
-      .partitionBy(col("gate_key"))
-      .orderBy(col("gate_seg"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = segAxis
-      .join(segLast, Seq("gate_key", "gate_seg"), "left")
-      .withColumn("carry_flag", last(col("seg_flag"), ignoreNulls = true).over(wCarry))
-      .select(col("gate_key").as("ck"), col("gate_seg").as("cs"), col("carry_flag"))
-
-    // (1) + (4): segment-bounded running state, carry-in broadcast back.
-    val wSeg = Window
-      .partitionBy(col("gate_key"), col("gate_seg"))
-      .orderBy(col("arrival"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val deviceGated = keyed
-      .withColumn("seg_run", last(col("gate_flag"), ignoreNulls = true).over(wSeg))
-      .join(broadcast(carry),
-        col("gate_key") <=> col("ck") && col("gate_seg") <=> col("cs"), "left")
-      .withColumn("device_online", coalesce(col("seg_run"), col("carry_flag"), lit(0)))
-      .filter(col("topic").isin(Topics.statusTopicFor.keys.toSeq: _*) && col("device_online") === 1)
-      .drop("gate_key", "gate_flag", "gate_seg", "seg_run", "ck", "cs", "carry_flag",
-        "device_online")
-
-    mateGate(deviceGated, raw)
-  }
-
-  /** Device key for gate rows: the device's status topic, for both its
-    * data topic and the status topic itself; NULL for everything else. */
-  private def deviceKeyCol: Column = {
-    val statusOf = Topics.statusTopicFor
-    statusOf.foldLeft(lit(null: String)) { case (acc, (data, status)) =>
-      when(col("topic") === data || col("topic") === status, statusOf(data)).otherwise(acc)
+    * Replays status rows `(key, topic, payload)` in key order from the
+    * carried flags; rows with equal keys keep their given order. Returns
+    * the end flags and, per data topic, the sorted keys at which its gate
+    * opens or closes (`Long.MinValue` when it is open from the start).
+    * The key is the log index in streaming and the arrival in batch. */
+  def replay(
+      carry: GateFlags,
+      status: Seq[(Long, String, Array[Byte])]): (GateFlags, Map[String, Array[Long]]) = {
+    def open(f: Map[String, Boolean], data: String) =
+      f(Topics.statusTopicFor(data)) && f(Topics.MateStatus)
+    val flips = Topics.dataTopics.keys.map(_ -> Array.newBuilder[Long]).toMap
+    flips.foreach { case (d, b) => if (open(carry.online, d)) b += Long.MinValue }
+    val end = status.sortBy(_._1).foldLeft(carry.online) { case (f, (k, topic, payload)) =>
+      val next = f.updated(topic, flag(payload, f(topic)))
+      flips.foreach { case (d, b) => if (open(next, d) != open(f, d)) b += k }
+      next
     }
+    (GateFlags(end), flips.map { case (d, b) => d -> b.result() })
   }
 
-  // Reference compares the ascii payload to "online"/"offline"; anything
-  // else leaves the previous state — it only flips on exact matches, and
-  // unknown devices default to "offline" (`_status` init map). Binary
-  // equality avoids ANSI decode() throwing on binary packet payloads.
-  private val online = lit("online".getBytes("US-ASCII"))
-  private val offline = lit("offline".getBytes("US-ASCII"))
+  /** A data row passes when an odd number of its topic's flips lie at or
+    * below its key, so a status row applies to a data row with the same
+    * key. Rows on any other topic never pass. */
+  def passes(flips: Map[String, Array[Long]], topic: String, key: Long): Boolean =
+    flips.get(topic).exists { f =>
+      var lo = 0
+      var hi = f.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (f(mid) <= key) lo = mid + 1 else hi = mid
+      }
+      lo % 2 == 1
+    }
 
-  /** 1/0/NULL status flag: defined only on status rows with an exact
-    * online/offline payload. */
-  private def statusFlagCol: Column = {
-    val isStatusRow = col("topic").isin(
-      (Topics.MateStatus +: Topics.statusTopicFor.values.toSeq): _*)
-    when(isStatusRow && col("payload") === online, 1)
-      .when(isStatusRow && col("payload") === offline, 0)
-  }
-
-  /** Global mate gate: intervals from the tiny mate/status changelog,
-    * broadcast; a data row passes if it falls in an online interval. */
-  private def mateGate(deviceGated: DataFrame, raw: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val mateIntervals = raw
-      .filter(col("topic") === Topics.MateStatus)
-      .select(
-        col("topic"),
-        col("arrival").as("on_from"),
-        when(col("payload") === online, "online")
-          .when(col("payload") === offline, "offline").as("sv"))
-      // non-matching payloads leave the state unchanged → they must not
-      // open or close an interval
-      .filter(col("sv").isNotNull)
-      // partition by `topic` — constant by the filter above (one logical
-      // mate-status stream, so one partition is the SEMANTICS, and the
-      // changelog is a handful of flips), but non-foldable, so the
-      // partition spec survives optimization and WindowExec doesn't warn
-      // about a missing one. lit(1) here gets constant-folded to an empty
-      // spec and spams "No Partition Defined" over a ~10-row frame.
-      .withColumn("on_to", lead(col("on_from"), 1, null).over(
-        Window.partitionBy(col("topic")).orderBy(col("on_from"))))
-      .filter(col("sv") === "online")
-      .select("on_from", "on_to")
-
-    deviceGated.join(
-      broadcast(mateIntervals),
-      col("arrival") >= col("on_from") &&
-        (col("on_to").isNull || col("arrival") < col("on_to")),
-      "left_semi")
+  /** Batch form of the status gate: the data rows of `raw` whose device
+    * and mate were online at their arrival, with every column kept.
+    *
+    * One job collects the status rows to the driver, which replays them
+    * in arrival order from all-offline; one narrow filter then checks
+    * each data row against its topic's flips. No shuffle, no window:
+    * nothing sorts a device's history. The driver holds the status
+    * changelog only, O(status rows): 40,234 rows for `q_status_gate` at
+    * sf0.1, 40% of `events`. A status row without an arrival has no
+    * place in the order and is left out; a data row without one is
+    * dropped. */
+  def gated(raw: DataFrame): DataFrame = {
+    val status = raw
+      .filter(col("topic").isin(statusTopics: _*) && col("arrival").isNotNull)
+      .select(unix_micros(col("arrival")), col("topic"), col("payload"))
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getAs[Array[Byte]](2)))
+    val (_, flips) = replay(allOffline, status.toSeq)
+    val gate = udf((topic: String, key: Long) => passes(flips, topic, key))
+    raw.filter(gate(col("topic"), unix_micros(col("arrival"))))
   }
 
   /** Full reference pipeline: gate → decode → explode. */

@@ -58,6 +58,11 @@ class PlanSpec extends AnyFunSuite {
     assert(row.getDouble(3) === (5 % 5000) / 10.0)
   }
 
+  test("q_status_gate: no Window — no task sorts a device's history") {
+    val p = plan(SolarQueries.qStatusGate)
+    assert(!p.contains("Window"), p)
+  }
+
   test("q_range_scan: time bound reaches the parquet scan (raw nanos filter)") {
     val p = plan(TimeSeriesQueries.qRangeScan)
     assert(p.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts"))

@@ -45,26 +45,4 @@ class BucketedJoinSpec extends AnyFunSuite {
     assert(!belowJoin.contains("Exchange hashpartitioning(o_orderkey"))
     assert(p.contains("SelectedBucketsCount"))
   }
-
-  test("compaction collapses per-batch small files, content preserved") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/b"
-    val epoch = 1700000000L
-    // 5 appends = 5 small files in the same partition
-    for (i <- 0 until 5) {
-      val raw = Seq((Topics.FxData, SolarSynth.encodeFx(epoch + i, i.toLong), new java.sql.Timestamp(0L)))
-        .toDF("topic", "payload", "arrival")
-      PointStore.write(SolarIngest.points(raw), dir)
-    }
-    def dataFiles = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(dir)).filter(_.getName.endsWith(".parquet"))
-    }
-    assert(dataFiles.size >= 5)
-    val before = PointStore.read(spark, dir).count()
-    PointStore.compact(spark, dir)
-    assert(dataFiles.size === 1)
-    assert(PointStore.read(spark, dir).count() === before)
-  }
 }

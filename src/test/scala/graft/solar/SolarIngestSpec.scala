@@ -82,6 +82,19 @@ class SolarIngestSpec extends AnyFunSuite {
     assert(passed.toSet === Set(at(3), at(7)))
     // and the full pipeline yields 2 packets × 14 fields
     assert(SolarIngest.gatedPoints(raw).count() === 28)
+
+    // arrival ties: a status row applies to a data row with the same
+    // arrival, whatever their order in the input
+    val tied = Seq(
+      (Topics.FxData, fx, at(0)), // passes: both flips below come at the same arrival
+      (Topics.MateStatus, online, at(0)),
+      (Topics.FxStatus, online, at(0)),
+      (Topics.FxData, fx, at(1)), // passes
+      (Topics.FxData, fx, at(2)), // dropped: the mate goes offline at this arrival
+      (Topics.MateStatus, offline, at(2))
+    ).toDF("topic", "payload", "arrival")
+    assert(SolarIngest.gated(tied).select("arrival").collect().map(_.getTimestamp(0)).toSet ===
+      Set(at(0), at(1)))
   }
 
   test("downsample: raw bucket rolls up to a coarser bucket, same query surface") {
